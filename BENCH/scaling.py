@@ -162,7 +162,7 @@ def run_at(n_executors: int, n_events: int, n_batches: int, pkg: str) -> dict:
     cmd += [
         "--py-files", pkg,
         os.path.join(REPO, "BENCH", "scaling_job.py"),
-        str(n_events), str(n_batches), os.environ.get("KMW_SCALING_WRITE_MODE", "mor"),
+        str(n_events), str(n_batches),
     ]
     pinner = _pinner(cpu_spec)
     try:
@@ -254,7 +254,6 @@ def main():
     config = {
         "exec_cores": C, "exec_mem_mb": EXEC_MEM_MB, "n_events": n_events,
         "n_batches": n_batches, "trials": trials,
-        "write_mode": os.environ.get("KMW_SCALING_WRITE_MODE", "mor"),
         "extra_confs": os.environ.get("KMW_SCALING_EXTRA_CONFS", ""),
         "probe_gate": PROBE_GATE,
         "git_head": subprocess.run(

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 def main():
     n_events = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    write_mode = sys.argv[3] if len(sys.argv) > 3 else "mor"
     spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     # defaultParallelism races executor registration on local-cluster; parse
@@ -60,19 +59,18 @@ def main():
     # only ever holds one batch in flight, so a bigger warmup just wastes
     # trial wall-clock.
     sc.setJobDescription("warmup merge (one batch volume, untimed)")
-    warm = LakeTable.create(spark, f"{work}/warm", n_buckets=64, write_mode=write_mode)
+    warm = LakeTable.create(spark, f"{work}/warm", n_buckets=64)
     warm.merge(
         transform_events(
             log.filter(F.col("commit_seq") < n_events // n_batches), fingerprint=False
         ),
         source_id="w", batch_id=0,
     )
-    if write_mode == "mor":
-        warm.compact()
+    warm.compact()
     import shutil as _sh
     _sh.rmtree(f"{work}/warm", ignore_errors=True)
 
-    table = LakeTable.create(spark, f"{work}/table", n_buckets=64, write_mode=write_mode)
+    table = LakeTable.create(spark, f"{work}/table", n_buckets=64)
     step = n_events // n_batches
     t0 = time.time()
     batch_secs = []
@@ -85,19 +83,17 @@ def main():
                          source_id="scale", batch_id=b)
         batch_secs.append(round(time.time() - tb, 3))
         print(json.dumps({"batch": b, "phases": st.get("phases")}), flush=True)
-    if write_mode == "mor":
-        # pay for the read-optimized table inside the timed region — deltas
-        # are never left unpaid-for (same contract as bench.py's flagship)
-        sc.setJobDescription("final compaction (timed)")
-        tb = time.time()
-        table.compact()
-        batch_secs.append(round(time.time() - tb, 3))
+    # pay for the read-optimized table inside the timed region — deltas
+    # are never left unpaid-for (same contract as bench.py's flagship)
+    sc.setJobDescription("final compaction (timed)")
+    tb = time.time()
+    table.compact()
+    batch_secs.append(round(time.time() - tb, 3))
     dt = time.time() - t0
     print(json.dumps({
         "cores": cores,
         "n_events": n_events,
         "n_batches": n_batches,
-        "write_mode": write_mode,
         "seconds": round(dt, 3),
         "batch_seconds": batch_secs,
         "events_per_sec": round(n_events / dt, 1),

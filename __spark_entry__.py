@@ -231,11 +231,12 @@ def _cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cdc_patch_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial-update application (operators/patch.py + LakeTable.
-    _materialize_patches): every 'update' in the derived log becomes a
+    _fold_patches): every 'update' in the derived log becomes a
     DELTA event carrying only the columns its patch_mask lists (Mongo
     updateDescription semantics, /root/reference/internal/mongo/event.go);
     untouched columns inherit — within the batch from the per-column LWW
-    fold, across batches from bucket-pruned table state. The oracle replays
+    fold, across batches from the per-column read of masked deltas
+    (LakeTable._resolve_lww_columns) on a default table. The oracle replays
     the same per-column fold with filtered struct-wrapped arg_max (the
     struct wrap preserves NULL values a delete writes)."""
     from kafka_mongo_watcher_spark.operators.envelope import transform_events
@@ -306,8 +307,8 @@ def _cdc_patch_deferred(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver verifies the per-column LWW read resolution over live masked
     deltas (the Paimon partial-update merge-engine analog). Guards assert
     the deferred path actually engaged (strategy=patch_append, manifest
-    masked_buckets non-empty) so a silent fallback to the eager path can't
-    pass as coverage."""
+    masked_buckets non-empty) so a silent fallback to full-row writes
+    can't pass as coverage."""
     from kafka_mongo_watcher_spark.operators.envelope import transform_events
     from kafka_mongo_watcher_spark.plans.lake import LakeTable
 

@@ -39,11 +39,10 @@ def bench_cdc_replay(
     *,
     salted: bool,
     n_batches: int = 4,
-    write_mode: str = "mor",
     probe_lookups: int = 0,
     patch_updates: bool = False,
 ) -> dict:
-    """Timed: N micro-batch merges + (for MOR) a final full compaction, so
+    """Timed: N micro-batch merges + a final full compaction, so
     the number covers the entire cost of producing a read-optimized table —
     deltas are never left unpaid-for."""
     from pyspark.sql import functions as F
@@ -58,9 +57,7 @@ def bench_cdc_replay(
         events = generate_events(spark, n_events, gen_parallelism=n_files)
         events.write.mode("overwrite").parquet(f"{work}/log")  # gen cost excluded
         log = spark.read.parquet(f"{work}/log")
-        table = LakeTable.create(
-            spark, f"{work}/table", n_buckets=64, write_mode=write_mode
-        )
+        table = LakeTable.create(spark, f"{work}/table", n_buckets=64)
         step = n_events // n_batches
         t0 = time.time()
         strategies = []
@@ -70,7 +67,7 @@ def bench_cdc_replay(
             if patch_updates:
                 # updates arrive as updateDescription DELTAS: half patch
                 # content (+sha via the mask alias), half patch lang — the
-                # merge folds per column and joins state for patch-only keys
+                # merge folds per column and appends masked deltas
                 chunk = chunk.withColumn(
                     "patch_mask",
                     F.when(
@@ -105,7 +102,6 @@ def bench_cdc_replay(
                 .limit(probe_lookups)
                 .collect()
             ]
-        if probe_lookups and write_mode == "mor":
             # point reads against the LIVE delta chain (pre-compaction, the
             # steady state of a continuously-ingesting CDC table): bucket
             # pruning + key bounds + parquet-native Bloom probes. Untimed
@@ -116,8 +112,7 @@ def bench_cdc_replay(
             )
             out["lookup_delta_p50_ms"] = _p50(keys)
         t1 = time.time()
-        if write_mode == "mor":
-            table.compact()
+        table.compact()
         out["seconds"] = t_merges + (time.time() - t1)
         if probe_lookups:
             # post-compaction point reads (read-optimized steady state):
@@ -287,11 +282,8 @@ def main() -> None:
     r2 = _min_of_2("cdc_replay_salted",
                    lambda: bench_cdc_replay(spark, n_events, salted=True))
     strategies["cdc_replay_salted"] = r2["dedup_strategies"]
-    r3 = _min_of_2("cdc_replay_cow",
-                   lambda: bench_cdc_replay(spark, n_events, salted=False, write_mode="cow"))
-    strategies["cdc_replay_cow"] = r3["dedup_strategies"]
     # same stream with updates delivered as updateDescription deltas: the
-    # per-column fold + bucket-pruned state join path (operators/patch.py)
+    # per-column fold + masked delta append path (operators/patch.py)
     r4 = _min_of_2("cdc_replay_patch",
                    lambda: bench_cdc_replay(spark, n_events, salted=False, patch_updates=True))
     strategies["cdc_replay_patch"] = r4["dedup_strategies"]
@@ -400,9 +392,7 @@ def main() -> None:
                           "heavy_benches": "min of 2 (first run pays shape warmup)"},
             "n_batches": 4,
             "n_buckets": {"cdc_replay": 64, "cdc_replay_salted": 64,
-                          "cdc_replay_cow": 64, "cdc_replay_patch": 64},
-            "write_mode": {"cdc_replay": "mor", "cdc_replay_salted": "mor",
-                           "cdc_replay_cow": "cow", "cdc_replay_patch": "mor"},
+                          "cdc_replay_patch": 64},
             # ACTUAL per-mode routing reported by merge stats (the auto
             # policy is winner-ratio-aware since r3; at this batch shape —
             # ~0.7 winners/event — auto routes to salted)

@@ -21,7 +21,7 @@ Layout:
     sources/     event-log readers (batch replay, streaming tail, snapshot)
     functions/   vectorized pandas UDFs + expression helpers
     operators/   LWW dedup, envelope build/transform, filters, keep-last-N
-    plans/       LakeTable: manifests, bucketed COW merge, fencing, compact
+    plans/       LakeTable: manifests, bucketed MOR merge, fencing, compact
     streaming/   foreachBatch pipeline, checkpoint resume
 """
 

@@ -6,8 +6,9 @@ document (the reference watcher forwards updateDescription unless
 ``ignoreUpdateDescription`` is set, /root/reference/internal/mongo/event.go).
 A CDC lake engine must APPLY such deltas: the stored row keeps the columns
 the event didn't touch. This module folds a batch of mixed full/patch
-events into one full row per key so that storage always holds full rows
-and the MOR/COW row-LWW read path stays unchanged.
+events into one row per key; `LakeTable.merge` appends each folded row as
+a delta whose `_write_mask` names the columns it wrote, and reads resolve
+those deltas per column (`LakeTable._resolve_lww_columns`).
 
 Batch convention
 ----------------
@@ -22,14 +23,12 @@ Per-column LWW fold
 -------------------
 The final value of column c for a key is the value of the LAST event that
 WRITES c (by ``(commit_seq, offset)``). Only when NO event in the batch
-writes c does the column inherit from current table state — which is
-exactly the set of keys touched exclusively by patch rows; those (and only
-those) pay a bucket-pruned state join at merge time.
+writes c does the column inherit from table state — at read or
+compaction time, never at ingest.
 
 Scale shape: the fold is ONE hash aggregate keyed on (repo, path) —
 ``max_by`` with a conditional ordering key per column, map-side
-combinable; no window, no self-join. The state read is pruned to the
-affected buckets and joined only against patch-only keys.
+combinable; no window, no self-join, no state read.
 
 Ordering contract
 -----------------
@@ -64,7 +63,7 @@ def fold_patch_batch(
     (each from the key's LAST event) + one ``c`` value and one ``_w_c``
     boolean ("some batch event wrote c") per payload column. Keys where any
     ``_w_c`` is false inherit that column from table state (the caller's
-    job). ``mask_aliases`` maps a derived column to the mask name that
+    job — LakeTable stores the flags as the row's write mask). ``mask_aliases`` maps a derived column to the mask name that
     writes it (e.g. ``content_sha256`` is written whenever the mask says
     ``content``).
     """

@@ -1395,7 +1395,7 @@ def _stage_merge(df: DataFrame, spec, tables: dict) -> DataFrame:
             }
             # mask names are LOGICAL table columns: a batch carrying
             # pre-fingerprint content_raw must mask 'content' — the name
-            # _materialize_patches keys content writes off (ADVICE r3;
+            # LakeTable._fold_patches keys content writes off (ADVICE r3;
             # mirrors merge's mask_aliases={'content_sha256': 'content'}) —
             # or the content update would be silently dropped
             mask_alias = {"content_raw": "content"}

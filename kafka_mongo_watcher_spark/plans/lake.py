@@ -1,4 +1,4 @@
-"""LakeTable — a bucketed, manifest-versioned, copy-on-write upsert table.
+"""LakeTable — a bucketed, manifest-versioned, merge-on-read upsert table.
 
 The north_star calls for `MERGE INTO` an Iceberg table; this sandbox has no
 Iceberg/Delta jars, so this module implements the same semantics natively on
@@ -9,21 +9,18 @@ sink. The design choices are the ones that matter at 100 TB:
 
 - **Key-bucketed layout.** Rows live in `n_buckets` hash buckets on
   pmod(xxhash64(repo, path), B) — the same function that partitions the
-  change stream, the Kafka-hash-partitioning analog
-  (/root/reference/internal/kafka/client.go:29-31). A merge only reads and
-  rewrites the buckets its batch touches: an incremental batch touching 3%
-  of buckets rewrites 3% of the table, not 100%.
-- **Two write modes.** `cow` (copy-on-write): a merge rewrites every touched
-  bucket — fastest reads, but a CDC batch whose keys hash across all buckets
-  rewrites the whole table (the r1 scale-killer, VERDICT §plan-audit a).
-  `mor` (merge-on-read, the Iceberg MOR / deletion-vector shape): a merge
+  change stream, the Kafka-hash-partitioning analog (the reference
+  watcher's internal/kafka/client.go:29-31). Reads, compaction and lookups
+  touch only the buckets they need.
+- **Merge-on-read** (the Iceberg MOR / deletion-vector shape). A merge
   appends ONLY the winner rows as per-bucket delta files — write cost is
   O(batch), independent of table size — and readers resolve LWW across
   base+delta at scan time, only for buckets that actually have deltas.
   Per-bucket auto-compaction (`kmw.mor.maxDeltasPerBucket`) folds deltas
   back into the base, bounding read amplification; `compact()` does the
-  full fold. CDC ingest at 100 TB runs `mor`; `cow` remains for read-heavy
-  small tables.
+  full fold and is the read-optimized layout. Tables written copy-on-write
+  by older engines (manifests stamped `write_mode: "cow"`) load and read
+  unchanged; their next merge appends deltas and stamps `"mor"`.
 - **Snapshot isolation via manifests.** Every commit writes an immutable
   manifest (bucket → file list) and atomically flips a `_latest` pointer
   (os.replace), exactly Iceberg's snapshot+pointer model. Readers never see
@@ -116,7 +113,16 @@ INTERNAL_FIELDS = [
     # NULL = full row (writes every column) — files written before this
     # field existed read back as NULL and mean exactly that.
     ("_write_mask", "bigint"),
+    # Mask bits for payload positions >= _MASK_BITS, _MASK_BITS per element:
+    # position i lives in element i // _MASK_BITS (1-based), bit
+    # i % _MASK_BITS. Only partial rows of tables wider than _MASK_BITS
+    # payload columns store it; NULL (or a short array) = none of those
+    # columns written. Files that lack it read back NULL.
+    ("_write_mask_ext", "array<bigint>"),
 ]
+#: Mask bits per bigint word (the sign bit and bit 62 stay clear).
+_MASK_BITS = 62
+_MASK_COLS = ("_write_mask", "_write_mask_ext")
 KEY_COLS = ["repo", "path"]
 DEFAULT_USER_SCHEMA = [
     ("repo", "string"),
@@ -323,10 +329,13 @@ class LakeTable:
         *,
         n_buckets: int = 32,
         user_schema: list[tuple[str, str]] | None = None,
-        write_mode: str = "cow",
+        write_mode: str = "mor",
     ) -> "LakeTable":
-        if write_mode not in ("cow", "mor"):
-            raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
+        if write_mode != "mor":
+            raise ValueError(
+                f"write_mode must be 'mor', got {write_mode!r}; tables are "
+                "merge-on-read only — compact() gives the read-optimized layout"
+            )
         os.makedirs(os.path.join(path, "_manifests"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         manifest = {
@@ -431,7 +440,6 @@ class LakeTable:
             version = int(f.read().strip())
         with open(self._manifest_path(version)) as f:
             self.manifest = json.load(f)
-        self.manifest.setdefault("write_mode", "cow")  # pre-MOR manifests
         self.manifest.setdefault("deltas", {})
         # sidecar blobs are immutable (named by version+section+bucket), so
         # the resolution cache survives refresh()
@@ -655,7 +663,8 @@ class LakeTable:
         """Partial-update merge-on-read resolution: per-COLUMN last-writer-
         wins across base + masked-delta rows (the Paimon partial-update
         merge-engine analog). Column c's final value comes from the newest
-        row whose `_write_mask` covers c (NULL mask = full row writes all);
+        row whose write mask covers c (`_write_mask`, then `_write_mask_ext`
+        past `_MASK_BITS` positions; NULL mask = full row writes all);
         row-level internals (commit_seq/offset/partition_id/is_deleted)
         come from the newest row overall, so a trailing delete tombstones
         the key and a patch after a delete resurrects it with only the
@@ -666,13 +675,18 @@ class LakeTable:
         retires the masks it folds."""
         payload = [n for n, _ in self.manifest["user_schema"] if n not in KEY_COLS]
         ordk = F.struct(F.col("commit_seq"), F.col("offset"))
-        row_fields = [n for n, _ in INTERNAL_FIELDS if n != "_write_mask"]
+        row_fields = [n for n, _ in INTERNAL_FIELDS if n not in _MASK_COLS]
         aggs = [
             F.max_by(F.struct(*[F.col(n) for n in row_fields]), ordk).alias("_last")
         ]
         for i, c in enumerate(payload):
+            word = (
+                F.col("_write_mask")
+                if i < _MASK_BITS
+                else F.try_element_at(F.col("_write_mask_ext"), F.lit(i // _MASK_BITS))
+            )
             writes = F.col("_write_mask").isNull() | (
-                F.shiftright(F.col("_write_mask"), i).bitwiseAND(F.lit(1)) == F.lit(1)
+                F.shiftright(word, i % _MASK_BITS).bitwiseAND(F.lit(1)) == F.lit(1)
             )
             # a tombstone WRITES every column as NULL no matter what payload
             # bytes the delete event happened to carry (plain-batch deletes
@@ -692,6 +706,7 @@ class LakeTable:
                 *payload,
                 *[F.col(f"_last.{n}").alias(n) for n in row_fields],
                 F.lit(None).cast("bigint").alias("_write_mask"),
+                F.lit(None).cast("array<bigint>").alias("_write_mask_ext"),
             )
         )
 
@@ -736,7 +751,7 @@ class LakeTable:
                     )
                 )
             )
-        df = df.drop("_write_mask")
+        df = df.drop(*_MASK_COLS)
         return df if include_tombstones else df.filter(~F.col("is_deleted"))
 
     def snapshot(self) -> DataFrame:
@@ -951,7 +966,7 @@ class LakeTable:
                     )
                 )
             )
-        df = df.drop("_write_mask")
+        df = df.drop(*_MASK_COLS)
         if not include_tombstones:
             df = df.filter(~F.col("is_deleted"))
 
@@ -1000,7 +1015,6 @@ class LakeTable:
             raise ValueError(f"no committed version {version} at {self.path}")
         with open(mpath) as f:
             m = json.load(f)
-        m.setdefault("write_mode", "cow")
         m.setdefault("deltas", {})
         return m
 
@@ -1241,19 +1255,20 @@ class LakeTable:
         (Iceberg incremental read / `table_changes` analog). Output is the
         full internal schema plus `_commit_version` and `_change_type`
         ('upsert' | 'delete'); per (key, _commit_version) there is exactly
-        one row — the batch's LWW winner. Deferred partial-update commits
-        emit their winners as PARTIAL rows: `_write_mask` names (by bit,
-        over user_schema payload positions) the columns the commit actually
-        wrote — NULL mask = full row — so a CDC consumer can distinguish
-        "set to NULL" from "untouched", which eager materialization
-        couldn't express.
+        one row — the batch's LWW winner. Partial-update commits emit their
+        winners as PARTIAL rows: `_write_mask` (plus `_write_mask_ext` past
+        `_MASK_BITS` payload columns) names by bit, over user_schema payload
+        positions, the columns the commit actually wrote — NULL mask = full
+        row — so a CDC consumer can distinguish "set to NULL" from
+        "untouched".
 
         Scale shape: a MERGE version's delta files are exactly its change
         rows, so this reads O(changed rows) parquet — no join, no shuffle,
         no table scan. Compaction commits rewrite files without logical
-        changes and contribute nothing. MOR only: a COW merge folds its
-        changes into rewritten bucket files, so the per-commit rows are
-        not isolated on disk — raises rather than over-reporting."""
+        changes and contribute nothing. A merge committed copy-on-write by
+        an older engine folded its changes into rewritten bucket files, so
+        its per-commit rows are not isolated on disk — a range containing
+        one raises rather than over-reporting."""
         until = self.version if until_version is None else until_version
         if not 0 <= since_version <= until <= self.version:
             raise ValueError(
@@ -1271,10 +1286,11 @@ class LakeTable:
                     f"version {v} has commit_kind {kind!r}; changelog needs "
                     "manifests stamped by this engine"
                 )
-            if m["write_mode"] != "mor":
+            if m.get("write_mode") != "mor":
                 raise ValueError(
-                    "changelog requires a merge-on-read table (COW rewrites "
-                    "do not isolate per-commit change rows)"
+                    f"version {v} is a copy-on-write merge; changelog requires "
+                    "merge-on-read commits (COW rewrites do not isolate "
+                    "per-commit change rows)"
                 )
             # Files written BY commit v live under data/v{v:08d}_<attempt>/
             # (per-attempt dirs since the optimistic-concurrency change; a
@@ -1359,7 +1375,7 @@ class LakeTable:
                 df = self._resolve_lww_columns(df)
             else:
                 df = self._resolve_lww(df)
-        return df.drop("_write_mask").filter(
+        return df.drop(*_MASK_COLS).filter(
             (F.col("repo") == repo) & (F.col("path") == path) & ~F.col("is_deleted")
         )
 
@@ -1394,11 +1410,11 @@ class LakeTable:
             )
         return w
 
-    def _writer_count(self, n_targets: int | None = None) -> int:
-        """Write-stage task count: min(buckets to write, max(32, cluster
+    def _writer_count(self) -> int:
+        """Write-stage task count: min(n_buckets, max(32, cluster
         parallelism)) — scales with executors instead of r2's hard 32 cap,
-        while never planning more tasks than distinct buckets (each bucket
-        hashes to exactly one writer). `kmw.mor.maxWriters` overrides the
+        while never planning more tasks than buckets (each bucket hashes to
+        exactly one writer). `kmw.mor.maxWriters` overrides the
         cluster-derived ceiling."""
         ceiling = int(
             _conf(
@@ -1407,16 +1423,14 @@ class LakeTable:
                 str(max(32, self.spark.sparkContext.defaultParallelism)),
             )
         )
-        buckets = self.n_buckets if n_targets is None else n_targets
-        return max(1, min(ceiling, buckets))
+        return max(1, min(ceiling, self.n_buckets))
 
-    def _fold_patches(self, batch: DataFrame) -> tuple[DataFrame, list[str]]:
-        """Shared prefix of both patch-apply modes: fingerprint (null-gated
-        to rows that write content), fill table columns the batch lacks,
-        then per-column LWW fold WITHIN the batch (operators/patch.py) —
-        one map-side-combinable hash aggregate, no state read. Returns
-        (folded, payload_cols); folded carries one `_w_{c}` flag per
-        payload column ("some batch event wrote c")."""
+    def _fold_patches(self, batch: DataFrame) -> DataFrame:
+        """Patch-batch prefix of merge: fingerprint (null-gated to rows that
+        write content), fill table columns the batch lacks, then per-column
+        LWW fold WITHIN the batch (operators/patch.py) — one map-side-
+        combinable hash aggregate, no state read. The folded rows carry one
+        `_w_{c}` flag per payload column ("some batch event wrote c")."""
         from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
         from kafka_mongo_watcher_spark.operators.patch import fold_patch_batch
 
@@ -1448,65 +1462,9 @@ class LakeTable:
             for f in batch.schema.fields
             if f.name not in internal and f.name not in KEY_COLS
         ]
-        folded = fold_patch_batch(
+        return fold_patch_batch(
             batch, payload_cols, mask_aliases={"content_sha256": "content"}
         )
-        return folded, payload_cols
-
-    def _materialize_patches(self, batch: DataFrame, caches: list) -> DataFrame:
-        """EAGER patch apply (kmw.patch.deferred=false, or COW tables, or
-        >62 payload columns): fold partial-update rows into full rows, then
-        untouched columns inherit from current table state at merge time.
-        Storage keeps only full rows, so the row-LWW read path is untouched
-        by patches. Only keys written EXCLUSIVELY by patch rows pay the
-        state join, and the state read is bucket-pruned to their buckets —
-        read-modify-write delta CDC in its cheapest shape. MOR tables
-        default to the DEFERRED mode instead (merge() below): append the
-        folded rows as masked deltas and resolve per column at read/compact
-        time, which removes the state read from the ingest path entirely."""
-        folded, payload_cols = self._fold_patches(batch)
-        folded = folded.persist()
-        caches.append(folded)
-        out_cols = (
-            list(KEY_COLS)
-            + ["partition_id", "offset", "op", "commit_seq"]
-            + payload_cols
-        )
-        complete = F.lit(True)
-        for c in payload_cols:
-            complete = complete & F.col(f"_w_{c}")
-        done = folded.filter(complete).select(*out_cols)
-        pending = folded.filter(~complete)
-        # bounded driver list: <= n_buckets ids, read off the persisted fold
-        bucket_ids = [
-            r["_b"]
-            for r in pending.select(self._bucket_expr().alias("_b")).distinct().collect()
-        ]
-        if not bucket_ids:
-            return done
-        state_cols = [n for n, _ in self.manifest["user_schema"] if n not in KEY_COLS]
-        state = self.read_buckets(bucket_ids, include_tombstones=False).select(
-            *KEY_COLS, *[F.col(c).alias(f"_st_{c}") for c in state_cols]
-        )
-        ftypes = dict(folded.dtypes)
-        filled = pending.join(state, on=list(KEY_COLS), how="left").select(
-            *KEY_COLS,
-            "partition_id",
-            "offset",
-            "op",
-            "commit_seq",
-            *[
-                F.when(F.col(f"_w_{c}"), F.col(c))
-                .otherwise(
-                    F.col(f"_st_{c}")
-                    if c in state_cols
-                    else F.lit(None).cast(ftypes[c])
-                )
-                .alias(c)
-                for c in payload_cols
-            ],
-        )
-        return done.unionByName(filled)
 
     def merge(
         self,
@@ -1517,13 +1475,14 @@ class LakeTable:
         salted: bool = False,
         n_salts: int = 16,
     ) -> dict:
-        """Apply a change batch: LWW dedup → key-bucketed COW merge → atomic
-        snapshot commit. `batch` columns: repo, path, op, commit_seq, offset,
-        partition_id, plus payload columns (commit, content, content_sha256,
-        lang, ...). An optional `patch_mask` column (array<string>) marks
-        'update' rows as PARTIAL updates (Mongo updateDescription deltas)
-        writing only the masked columns — see _materialize_patches.
-        Returns per-merge stats incl. per-partition lineage."""
+        """Apply a change batch: LWW dedup → per-bucket delta append →
+        atomic snapshot commit. `batch` columns: repo, path, op, commit_seq,
+        offset, partition_id, plus payload columns (commit, content,
+        content_sha256, lang, ...). An optional `patch_mask` column
+        (array<string>) marks 'update' rows as PARTIAL updates (Mongo
+        updateDescription deltas) writing only the masked columns; they are
+        appended as masked deltas (see `_resolve_lww_columns`). Returns
+        per-merge stats incl. per-partition lineage."""
         self._assert_writable()
         import time as _time
 
@@ -1561,39 +1520,16 @@ class LakeTable:
         sc.setJobDescription(f"merge[{source_id}/{batch_id}]: tuple+lineage agg")
         order_cols = [c for c in ("commit_seq", "offset") if c in batch.columns]
         _dedup_caches: list = []
-        # Partial updates (Mongo updateDescription deltas): fold patch rows
-        # per column + inherit untouched columns from state, yielding one
-        # FULL row per key — dedup below is then a no-op and is skipped.
-        # Lineage/tuples still count the RAW deliveries.
+        # Partial updates (Mongo updateDescription deltas): fold the batch
+        # per column into one PARTIAL row per key and append it as a masked
+        # delta — a blind write, no state read at ingest, no persist, no
+        # bucket-id collect; reads and compaction resolve per column
+        # (_resolve_lww_columns). Dedup below is then a no-op and is
+        # skipped. Lineage/tuples still count the RAW deliveries.
         patched = "patch_mask" in batch.columns
         lineage_src = batch.drop("patch_mask") if patched else batch
-        # DEFERRED patch apply (default for MOR): append the batch-folded
-        # PARTIAL rows as masked deltas — blind writes, no state read at
-        # ingest — and resolve per column at read/compaction time
-        # (_resolve_lww_columns). The bit mask covers payload columns by
-        # user_schema position, so it caps at 62 columns (bigint, sign bit
-        # spared); wider tables and COW fall back to the eager
-        # read-modify-write path.
-        _non_payload = (
-            {n for n, _ in INTERNAL_FIELDS} | {"op", "lineage", "patch_mask"} | set(KEY_COLS)
-        )
-        _prospective_payload = {n for n, _ in self.manifest["user_schema"]} | {
-            ("content" if c == "content_raw" else c) for c in batch.columns
-        }
-        if "content_raw" in batch.columns:
-            _prospective_payload.add("content_sha256")
-        deferred_patch = (
-            patched
-            and self.manifest["write_mode"] == "mor"
-            and _conf(self.spark, "kmw.patch.deferred", "true") == "true"
-            and len(_prospective_payload - _non_payload) <= 62
-        )
-        if deferred_patch:
-            # no persist, no bucket-id collect, no state scan: the folded
-            # rows flow straight into the fused MOR delta write below
-            batch, _ = self._fold_patches(batch)
-        elif patched:
-            batch = self._materialize_patches(batch, _dedup_caches)
+        if patched:
+            batch = self._fold_patches(batch)
         tuples = key_order_tuples(
             lineage_src, KEY_COLS, order_cols, extra_cols=("partition_id",)
         ).persist()
@@ -1696,10 +1632,9 @@ class LakeTable:
         elif strategy == "semijoin" and not semijoin_fits:
             strategy = "window"
         if patched:
-            # the patch fold already produced exactly one row per key —
-            # full rows in eager mode, masked partial rows in deferred mode
+            # the patch fold already produced exactly one row per key
             winners = batch
-            strategy = "patch_append" if deferred_patch else "patch_fold"
+            strategy = "patch_append"
         elif strategy == "semijoin":
             # Winner set built FROM the cached tuples: the broadcast build
             # inside the write job runs one narrow agg over the cache — no
@@ -1757,9 +1692,11 @@ class LakeTable:
         for n, t in user_schema:  # union-by-name: fill columns the batch lacks
             if n not in winners.columns:
                 winners = winners.withColumn(n, F.lit(None).cast(t))
-        if deferred_patch:
-            # bit i of _write_mask ↔ payload column i of the FINAL (post-
-            # evolution) user_schema; every payload column went through the
+        if patched:
+            # bit i of the mask ↔ payload column i of the FINAL (post-
+            # evolution) user_schema, _MASK_BITS bits per bigint word: word 0
+            # is `_write_mask`, words 1.. form `_write_mask_ext` (stored only
+            # by tables that need it). Every payload column went through the
             # fold (manifest columns were null-filled pre-fold, new columns
             # came FROM the batch), so each has a `_w_{c}` flag — bits are
             # disjoint, so the sum is the bitwise OR
@@ -1769,11 +1706,13 @@ class LakeTable:
                 raise AssertionError(
                     f"deferred patch fold lost write flags for {_missing_w}"
                 )
-            mask_expr = F.lit(0).cast("bigint")
+            words = [F.lit(0).cast("bigint")] * max(
+                1, -(-len(_payload_names) // _MASK_BITS)
+            )
             all_written = F.lit(True)
             for i, c in enumerate(_payload_names):
-                mask_expr = mask_expr + F.when(
-                    F.col(f"_w_{c}"), F.lit(1 << i).cast("bigint")
+                words[i // _MASK_BITS] = words[i // _MASK_BITS] + F.when(
+                    F.col(f"_w_{c}"), F.lit(1 << (i % _MASK_BITS)).cast("bigint")
                 ).otherwise(F.lit(0).cast("bigint"))
                 all_written = all_written & F.col(f"_w_{c}")
             # normalize: a row that writes every column IS a full row —
@@ -1781,8 +1720,15 @@ class LakeTable:
             # inside a patch batch stay indistinguishable from plain rows)
             winners = winners.withColumn(
                 "_write_mask",
-                F.when(all_written, F.lit(None).cast("bigint")).otherwise(mask_expr),
+                F.when(all_written, F.lit(None).cast("bigint")).otherwise(words[0]),
             )
+            if len(words) > 1:
+                winners = winners.withColumn(
+                    "_write_mask_ext",
+                    F.when(all_written, F.lit(None).cast("array<bigint>")).otherwise(
+                        F.array(*words[1:])
+                    ),
+                )
         else:
             winners = winners.withColumn(
                 "_write_mask", F.lit(None).cast("bigint")
@@ -1792,254 +1738,66 @@ class LakeTable:
             F.col("offset").cast("bigint").alias("offset"),
             F.col("partition_id").cast("int").alias("partition_id"),
             (F.col("op") == "delete").alias("is_deleted"),
-            F.col("_write_mask"),
+            *[F.col(c) for c in _MASK_COLS if c in winners.columns],
         ]
         winners = winners.select(*out_cols).withColumn("_bucket", self._bucket_expr())
         _mark("plan_winners")
 
-        if self.manifest["write_mode"] == "mor":
-            # Merge-on-read: append ONLY the winner rows as per-bucket delta
-            # files — no read, no join, no rewrite of the existing table.
-            # Write cost is O(batch) regardless of how the batch's keys hash
-            # across buckets (the COW scale-killer, VERDICT r1).
-            #
-            # ONE fused payload pass: scan → semijoin dedup filter →
-            # fingerprint → bucket shuffle → parquet. r1 persisted winners
-            # and ran a separate bucket-count job first — a full extra
-            # materialization of the payload (cache build + re-read), the
-            # single largest memory-bandwidth term in the r2 scaling
-            # diagnosis. Row counts now ride the write job itself via
-            # Observation; touched buckets come from the output listing.
-            from pyspark.sql import Observation
+        # Merge-on-read: append ONLY the winner rows as per-bucket delta
+        # files — no read, no join, no rewrite of the existing table.
+        # Write cost is O(batch) regardless of how the batch's keys hash
+        # across buckets (rewriting touched buckets was the r1
+        # scale-killer).
+        #
+        # ONE fused payload pass: scan → semijoin dedup filter →
+        # fingerprint → bucket shuffle → parquet. r1 persisted winners
+        # and ran a separate bucket-count job first — a full extra
+        # materialization of the payload (cache build + re-read), the
+        # single largest memory-bandwidth term in the r2 scaling
+        # diagnosis. Row counts now ride the write job itself via
+        # Observation; touched buckets come from the output listing.
+        from pyspark.sql import Observation
 
-            new_version = self.version + 1
-            rel_dir = os.path.join("data", f"v{new_version:08d}_{uuid.uuid4().hex[:8]}")
-            out_dir = os.path.join(self.path, rel_dir)
-            sc.setJobDescription(f"merge[{source_id}/{batch_id}]: MOR fused dedup+delta write")
-            obs = Observation()
-            # Buckets hashed into writer partitions: every bucket maps to
-            # exactly one task ⇒ exactly one delta file per touched bucket
-            # per batch. Writer count scales with the CLUSTER (bounded by
-            # n_buckets — more writers than buckets is just empty tasks),
-            # not a hard 32: r2's fixed cap throttled every merge's write
-            # stage to 32 tasks on any larger cluster (VERDICT r2 §wrong 3).
-            # Override with kmw.mor.maxWriters.
-            n_writers = self._writer_count()
-            to_write = winners.observe(obs, F.count(F.lit(1)).alias("rows")).repartition(
-                n_writers, "_bucket"
-            )
-            if _conf(self.spark, "kmw.write.sortByKey", "true") == "true":
-                # Key-sorted delta files: the dynamic-partition write already
-                # sorts each task by _bucket; widening that same sort to
-                # (_bucket, repo, path) is two extra string comparators —
-                # FileFormatWriter sees its required ordering satisfied and
-                # plans NO second sort — and buys tight per-file key bounds
-                # (footer stats → lookup pruning) plus better RLE/dict
-                # compression on the key columns.
-                to_write = to_write.sortWithinPartitions("_bucket", *KEY_COLS)
-            self._write(to_write).mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-            # NB: Observation metrics can over-count on stage retries /
-            # speculative re-execution; merged_rows is reporting-only (never
-            # feeds an invariant) — anything invariant-grade must come from
-            # the committed parquet footers instead (ADVICE r2).
-            n_winners = int(obs.get["rows"])
-            for c in _dedup_caches:
-                c.unpersist()
-            _mark("dedup_delta_write")
-            touched = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(out_dir)
-                if d.startswith("_bucket=")
-            ) if os.path.isdir(out_dir) else []
-            new_deltas = dict(self.manifest["deltas"])  # refs carried verbatim
-            new_stats = dict(self.manifest.get("file_stats", {}))  # refs carried
-            new_by_bucket: dict[str, list[str]] = {}
-            written = 0
-            for b in touched:
-                files = self._ls_bucket(out_dir, rel_dir, b)
-                written += len(files)
-                if files:
-                    new_deltas[str(b)] = self._entry_files("deltas", str(b)) + files
-                    new_by_bucket[str(b)] = files
-            collected = self._collect_key_stats(
-                [f for fs in new_by_bucket.values() for f in fs]
-            )
-            for b, files in new_by_bucket.items():
-                entry = dict(self._stats_of(b))  # old bounds kept for old files
-                entry.update({f: collected[f] for f in files if f in collected})
-                if entry:
-                    new_stats[b] = entry
-            lineage = {
-                str(r["partition_id"]): {"events": r["events"], "max_offset": r["max_offset"]}
-                for r in lineage_rows
-            }
-            new_deltas = self._externalize("deltas", new_deltas, new_version)
-            new_stats = self._externalize("file_stats", new_stats, new_version)
-            # buckets whose delta chain may hold PARTIAL (masked) rows and
-            # therefore need per-column resolution; compaction retires them
-            masked_out = self._masked_buckets()
-            if deferred_patch:
-                masked_out = masked_out | {str(b) for b in touched}
-            new_manifest = {
-                "version": new_version,
-                "commit_kind": "merge",
-                "n_buckets": self.n_buckets,
-                "write_mode": "mor",
-                "user_schema": [list(x) for x in user_schema],
-                "buckets": dict(self.manifest["buckets"]),
-                "deltas": new_deltas,
-                "file_stats": new_stats,
-                "masked_buckets": sorted(masked_out, key=int),
-                "applied": {**applied, source_id: batch_id if batch_id is not None else applied.get(source_id, -1)},
-                "lineage": lineage,
-                "stats": {"delta_files": sum(self._entry_count(v) for v in new_deltas.values())},
-            }
-            self._commit(new_manifest)
-            _mark("manifest_commit")
-            sc.setJobDescription(None)
-            # bounded read amplification: fold any bucket whose delta
-            # chain grew past the cap back into its base (bucket-local
-            # rewrite — never the whole table)
-            max_deltas = int(_conf(self.spark, "kmw.mor.maxDeltasPerBucket", "8"))
-            # _entry_count, NOT len(): once a delta list is externalized to a
-            # sidecar ref {"ref","n"} its len() is 2 — comparing that against
-            # the cap would silently disable auto-compaction for exactly the
-            # buckets whose chains grew long enough to need it
-            over = [
-                int(b)
-                for b, fs in new_deltas.items()
-                if self._entry_count(fs) > max_deltas
-            ]
-            if over:
-                self.compact_buckets(over)
-                _mark("auto_compact")
-            return {
-                "skipped": False,
-                "phases": _phases,
-                "mode": "mor",
-                "version": self.version,
-                "touched_buckets": len(touched),
-                "files_written": written,
-                "merged_rows": n_winners,
-                "compacted_buckets": len(over),
-                "dedup_strategy": strategy,
-                "lineage": lineage,
-            }
-
-        # ---- copy-on-write path: winners is read twice (stats broadcast +
-        # write union), so materialize it once in cache and plan against the
-        # per-bucket counts.
-        winners = winners.persist()
-        try:
-            sc.setJobDescription(f"merge[{source_id}/{batch_id}]: dedup winners + bucket counts")
-            bucket_counts = winners.groupBy("_bucket").count().collect()
-            _mark("dedup_materialize")
-            touched = [r["_bucket"] for r in bucket_counts]
-            n_winners = sum(r["count"] for r in bucket_counts)
-            if not touched:
-                new_manifest = dict(self.manifest)
-                new_manifest["version"] = self.version + 1
-                new_manifest["commit_kind"] = "merge"
-                new_manifest["applied"] = {**applied, source_id: batch_id if batch_id is not None else applied.get(source_id, -1)}
-                self._commit(new_manifest)
-                return {"skipped": False, "version": self.version, "merged_rows": 0,
-                        "touched_buckets": 0, "lineage": []}
-
-            current = self.read_buckets(touched).withColumn("_bucket", self._bucket_expr())
-            # union-by-name handles old manifests narrower than evolved schema
-            full_fields = user_schema + INTERNAL_FIELDS
-            cur_sel = [
-                (F.col(n) if n in current.columns else F.lit(None).cast(t)).alias(n)
-                for n, t in full_fields
-            ] + [F.col("_bucket")]
-            current = current.select(*cur_sel)
-
-            # LWW across current-vs-incoming, decomposed into two
-            # broadcast-joinable passes (Spark cannot broadcast a full-outer
-            # join). winners is one row per key post-dedup, so:
-            #   kept    = current rows whose key is absent from the batch or
-            #             strictly newer than the batch row (left-outer join
-            #             against the BROADCAST batch key-stats);
-            #   win_out = batch winners that beat (>= tie: idempotent
-            #             re-apply) or miss the current row, decided against
-            #             the key-stats of matching current rows only
-            #             (left-semi, again broadcast).
-            # The big `current` side is scanned and rewritten but NEVER
-            # shuffled — no exchange of table data at any batch size. The two
-            # halves have disjoint keys and are written as separate files of
-            # the same snapshot. Broadcast is skipped for huge batches
-            # (initial snapshot loads): Catalyst then picks SMJ on the same
-            # plan.
-            data_cols = [n for n, _ in full_fields]
-            stat_cols = list(KEY_COLS) + ["commit_seq", "offset"]
-            # byte-based broadcast budget (ADVICE r1): the stats relation is
-            # one (key, commit_seq, offset) tuple per winner
-            small = n_winners * avg_bcast_row <= int(
-                _conf(self.spark, "kmw.merge.broadcastMaxBytes", str(64 << 20))
-            )
-            bcast = F.broadcast if small else (lambda df: df)
-
-            src_stats = bcast(
-                winners.select(*[F.col(c).alias(f"_s_{c}") for c in stat_cols])
-            )
-            tgt_newer = F.struct(F.col("commit_seq"), F.col("offset")) > F.struct(
-                F.col("_s_commit_seq"), F.col("_s_offset")
-            )
-            kept = (
-                current.join(
-                    src_stats,
-                    [F.col(k) == F.col(f"_s_{k}") for k in KEY_COLS],
-                    "left_outer",
-                )
-                .where(F.col(f"_s_{KEY_COLS[0]}").isNull() | tgt_newer)
-                .select(*data_cols, "_bucket")
-            )
-
-            cur_stats = current.select(*stat_cols).join(
-                bcast(winners.select(*KEY_COLS)), list(KEY_COLS), "left_semi"
-            )
-            cur_stats = bcast(
-                cur_stats.select(*[F.col(c).alias(f"_t_{c}") for c in stat_cols])
-            )
-            src_wins = F.col(f"_t_{KEY_COLS[0]}").isNull() | (
-                F.struct(F.col("commit_seq"), F.col("offset"))
-                >= F.struct(F.col("_t_commit_seq"), F.col("_t_offset"))
-            )
-            win_out = (
-                winners.join(
-                    cur_stats,
-                    [F.col(k) == F.col(f"_t_{k}") for k in KEY_COLS],
-                    "left_outer",
-                )
-                .where(src_wins)
-                .select(*data_cols, "_bucket")
-            )
-
-            new_version = self.version + 1
-            rel_dir = os.path.join("data", f"v{new_version:08d}_{uuid.uuid4().hex[:8]}")
-            out_dir = os.path.join(self.path, rel_dir)
-            # One write job: kept keeps the scan's own partitioning (no
-            # exchange); win_out gets one small shuffle to align buckets;
-            # union concatenates partitions without reshuffling either side.
-            sc.setJobDescription(f"merge[{source_id}/{batch_id}]: COW write ({len(touched)} buckets)")
-            cow_out = kept.unionByName(
-                win_out.repartition(self._writer_count(len(touched)), "_bucket")
-            )
-            if _conf(self.spark, "kmw.write.sortByKey", "true") == "true":
-                # same rationale as the MOR delta write: the dynamic-partition
-                # writer's mandatory per-task _bucket sort is widened to the
-                # key, so rewritten base files carry tight footer key bounds
-                cow_out = cow_out.sortWithinPartitions("_bucket", *KEY_COLS)
-            self._write(cow_out).mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-            _mark("cow_write")
-        finally:
-            winners.unpersist()
-            for c in _dedup_caches:
-                c.unpersist()
-            sc.setJobDescription(None)
-
-        # build the new manifest: touched buckets → new files, rest carried over
-        new_buckets = dict(self.manifest["buckets"])
+        new_version = self.version + 1
+        rel_dir = os.path.join("data", f"v{new_version:08d}_{uuid.uuid4().hex[:8]}")
+        out_dir = os.path.join(self.path, rel_dir)
+        sc.setJobDescription(f"merge[{source_id}/{batch_id}]: MOR fused dedup+delta write")
+        obs = Observation()
+        # Buckets hashed into writer partitions: every bucket maps to
+        # exactly one task ⇒ exactly one delta file per touched bucket
+        # per batch. Writer count scales with the CLUSTER (bounded by
+        # n_buckets — more writers than buckets is just empty tasks),
+        # not a hard 32: r2's fixed cap throttled every merge's write
+        # stage to 32 tasks on any larger cluster (VERDICT r2 §wrong 3).
+        # Override with kmw.mor.maxWriters.
+        n_writers = self._writer_count()
+        to_write = winners.observe(obs, F.count(F.lit(1)).alias("rows")).repartition(
+            n_writers, "_bucket"
+        )
+        if _conf(self.spark, "kmw.write.sortByKey", "true") == "true":
+            # Key-sorted delta files: the dynamic-partition write already
+            # sorts each task by _bucket; widening that same sort to
+            # (_bucket, repo, path) is two extra string comparators —
+            # FileFormatWriter sees its required ordering satisfied and
+            # plans NO second sort — and buys tight per-file key bounds
+            # (footer stats → lookup pruning) plus better RLE/dict
+            # compression on the key columns.
+            to_write = to_write.sortWithinPartitions("_bucket", *KEY_COLS)
+        self._write(to_write).mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+        # NB: Observation metrics can over-count on stage retries /
+        # speculative re-execution; merged_rows is reporting-only (never
+        # feeds an invariant) — anything invariant-grade must come from
+        # the committed parquet footers instead (ADVICE r2).
+        n_winners = int(obs.get["rows"])
+        for c in _dedup_caches:
+            c.unpersist()
+        _mark("dedup_delta_write")
+        touched = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(out_dir)
+            if d.startswith("_bucket=")
+        ) if os.path.isdir(out_dir) else []
+        new_deltas = dict(self.manifest["deltas"])  # refs carried verbatim
         new_stats = dict(self.manifest.get("file_stats", {}))  # refs carried
         new_by_bucket: dict[str, list[str]] = {}
         written = 0
@@ -2047,52 +1805,69 @@ class LakeTable:
             files = self._ls_bucket(out_dir, rel_dir, b)
             written += len(files)
             if files:
-                new_buckets[str(b)] = files
+                new_deltas[str(b)] = self._entry_files("deltas", str(b)) + files
                 new_by_bucket[str(b)] = files
-            else:
-                new_buckets.pop(str(b), None)  # bucket emptied (all deleted)
-                new_stats.pop(str(b), None)
-        # COW replaces a touched bucket's files wholesale → fresh stats entry
         collected = self._collect_key_stats(
             [f for fs in new_by_bucket.values() for f in fs]
         )
         for b, files in new_by_bucket.items():
-            entry = {f: collected[f] for f in files if f in collected}
+            entry = dict(self._stats_of(b))  # old bounds kept for old files
+            entry.update({f: collected[f] for f in files if f in collected})
             if entry:
                 new_stats[b] = entry
-            else:
-                new_stats.pop(b, None)
-
         lineage = {
             str(r["partition_id"]): {"events": r["events"], "max_offset": r["max_offset"]}
             for r in lineage_rows
         }
-        new_buckets = self._externalize("buckets", new_buckets, new_version)
+        new_deltas = self._externalize("deltas", new_deltas, new_version)
         new_stats = self._externalize("file_stats", new_stats, new_version)
+        # buckets whose delta chain may hold PARTIAL (masked) rows and
+        # therefore need per-column resolution; compaction retires them
+        masked_out = self._masked_buckets()
+        if patched:
+            masked_out = masked_out | {str(b) for b in touched}
         new_manifest = {
             "version": new_version,
             "commit_kind": "merge",
             "n_buckets": self.n_buckets,
-            "write_mode": self.manifest["write_mode"],
+            "write_mode": "mor",
             "user_schema": [list(x) for x in user_schema],
-            "buckets": new_buckets,
-            "deltas": dict(self.manifest["deltas"]),
+            "buckets": dict(self.manifest["buckets"]),
+            "deltas": new_deltas,
             "file_stats": new_stats,
-            "masked_buckets": sorted(self._masked_buckets(), key=int),
+            "masked_buckets": sorted(masked_out, key=int),
             "applied": {**applied, source_id: batch_id if batch_id is not None else applied.get(source_id, -1)},
             "lineage": lineage,
-            "stats": {"files": sum(self._entry_count(v) for v in new_buckets.values())},
+            "stats": {"delta_files": sum(self._entry_count(v) for v in new_deltas.values())},
         }
         self._commit(new_manifest)
         _mark("manifest_commit")
+        sc.setJobDescription(None)
+        # bounded read amplification: fold any bucket whose delta
+        # chain grew past the cap back into its base (bucket-local
+        # rewrite — never the whole table)
+        max_deltas = int(_conf(self.spark, "kmw.mor.maxDeltasPerBucket", "8"))
+        # _entry_count, NOT len(): once a delta list is externalized to a
+        # sidecar ref {"ref","n"} its len() is 2 — comparing that against
+        # the cap would silently disable auto-compaction for exactly the
+        # buckets whose chains grew long enough to need it
+        over = [
+            int(b)
+            for b, fs in new_deltas.items()
+            if self._entry_count(fs) > max_deltas
+        ]
+        if over:
+            self.compact_buckets(over)
+            _mark("auto_compact")
         return {
             "skipped": False,
             "phases": _phases,
-            "version": new_version,
+            "mode": "mor",
+            "version": self.version,
             "touched_buckets": len(touched),
             "files_written": written,
             "merged_rows": n_winners,
-            "broadcast_apply": small,
+            "compacted_buckets": len(over),
             "dedup_strategy": strategy,
             "lineage": lineage,
         }
@@ -2208,6 +1983,8 @@ class LakeTable:
         clustering order — correctness was unaffected, bounds are always
         recomputed, but the layout degraded to near-random)."""
         k = len(cols)
+        if k == 0:
+            raise ValueError("zorder needs at least one column")
         if k > 63:
             raise ValueError(f"zorder supports at most 63 columns, got {k}")
         bits = min(bits, 63 // k)
@@ -2276,7 +2053,11 @@ class LakeTable:
             bad = [c for c in arg or [] if c not in known]
             if bad:
                 raise ValueError(f"{arg_name} columns not in schema: {bad}")
-        df = self._bucket_local_resolve(ids, purge_tombstones=purge_tombstones)
+        # resolved rows are full, so the extension mask is always NULL and
+        # compacted files don't store it
+        df = self._bucket_local_resolve(
+            ids, purge_tombstones=purge_tombstones
+        ).drop("_write_mask_ext")
         if cluster_by:
             df = df.sortWithinPartitions("_bucket", *cluster_by, "repo", "path")
         elif zorder:
@@ -2398,7 +2179,7 @@ class LakeTable:
         )
         out = (
             df.repartition(
-                max(1, min(new_n_buckets, self._writer_count(new_n_buckets))),
+                max(1, min(new_n_buckets, self._writer_count())),
                 "_bucket",
             )
             .withColumn("_prev_repo", F.lag("repo").over(w))
@@ -2413,6 +2194,7 @@ class LakeTable:
         )
         if purge_tombstones:
             out = out.filter(~F.col("is_deleted"))
+        out = out.drop("_write_mask_ext")  # full rows, as in compaction
         new_version = self.version + 1
         rel_dir = os.path.join("data", f"v{new_version:08d}_{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)

@@ -53,13 +53,16 @@ _PA_TYPES = {
 def _pa_schema(fields: list[tuple[str, str]]):
     import pyarrow as pa
 
-    cols = []
-    for name, ddl in fields:
-        factory = _PA_TYPES.get(ddl.lower())
+    def _pa_type(ddl: str):
+        ddl = ddl.lower()
+        if ddl.startswith("array<") and ddl.endswith(">"):
+            return pa.list_(_pa_type(ddl[6:-1]))
+        factory = _PA_TYPES.get(ddl)
         if factory is None:
             raise ValueError(f"lake_changes: unsupported column type {ddl!r}")
-        cols.append(pa.field(name, getattr(pa, factory)()))
-    return pa.schema(cols)
+        return getattr(pa, factory)()
+
+    return pa.schema([pa.field(name, _pa_type(ddl)) for name, ddl in fields])
 
 
 def _read_manifest(table_path: str, version: int | None = None) -> dict:
@@ -161,8 +164,9 @@ class LakeChangesStreamReader(DataSourceStreamReader):
                 )
             if m.get("write_mode") != "mor":
                 raise ValueError(
-                    "lake_changes requires a merge-on-read table (COW rewrites "
-                    "do not isolate per-commit change rows)"
+                    f"lake_changes: version {v} is a copy-on-write merge; the "
+                    "changelog requires merge-on-read commits (COW rewrites do "
+                    "not isolate per-commit change rows)"
                 )
             base = os.path.join("data", f"v{v:08d}")
             for b in m.get("deltas", {}):
@@ -243,17 +247,12 @@ class LakeChangesDataSource(DataSource):
         return "lake_changes"
 
     def _fields(self) -> list[tuple[str, str]]:
+        from kafka_mongo_watcher_spark.plans.lake import INTERNAL_FIELDS
+
         m = _read_manifest(self.options["path"])
-        internal = [
-            ("commit_seq", "bigint"),
-            ("offset", "bigint"),
-            ("partition_id", "int"),
-            ("is_deleted", "boolean"),
-            ("_write_mask", "bigint"),
-        ]
         return (
             [tuple(x) for x in m["user_schema"]]
-            + internal
+            + INTERNAL_FIELDS
             + [("_commit_version", "bigint"), ("_change_type", "string")]
         )
 

@@ -6,7 +6,8 @@ consumers tail OUR table's commit log with checkpointed version offsets.
 
 The source must agree exactly with the batch `changes()` API (same rows,
 same `_commit_version`/`_change_type`), skip compaction commits, null-fill
-pre-evolution files, refuse COW tables, and respect `startingVersion` /
+pre-evolution files, refuse tables committed copy-on-write by older
+engines, and respect `startingVersion` /
 `maxVersionsPerBatch`.
 """
 
@@ -18,7 +19,7 @@ from pyspark.sql import functions as F
 from kafka_mongo_watcher_spark.plans.lake import LakeTable
 from kafka_mongo_watcher_spark.sources.lake_changes import LakeChangesDataSource
 
-from tests.test_lake_mor import _batch, _row
+from tests.test_lake_mor import _batch, _row, legacy_cow_table
 
 _KEYCOLS = ("repo", "path", "commit", "commit_seq", "_commit_version", "_change_type")
 
@@ -28,10 +29,8 @@ def _register(spark):
     spark.dataSource.register(LakeChangesDataSource)
 
 
-def _mk(spark, tmp_path, mode="mor", n=3):
-    t = LakeTable.create(
-        spark, str(tmp_path / "t"), n_buckets=4, write_mode=mode
-    )
+def _mk(spark, tmp_path, n=3):
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     for b in range(n):
         rows = [
             _row("insert" if b == 0 else "update", f"r{i}", "f.py", b * 100 + i)
@@ -145,7 +144,7 @@ def test_max_versions_per_batch_throttles_backfill(spark, tmp_path):
 
 
 def test_cow_table_refused(spark, tmp_path):
-    t = _mk(spark, tmp_path, mode="cow", n=1)
+    t = legacy_cow_table(spark, str(tmp_path / "t"))
     q = None
     with pytest.raises(Exception, match="merge-on-read"):
         q = _drain(spark, tmp_path, "cow", path=t.path, startingVersion=0)
@@ -197,30 +196,47 @@ def test_stream_schema_matches_changes_schema(spark, tmp_path):
 def test_tail_cli_drains_to_parquet(spark, tmp_path):
     """`python -m kafka_mongo_watcher_spark tail --available-now` — the
     consumer-side CLI over the streaming source: backfills the whole
-    changelog into a parquet dir and exits 0 with a resumable checkpoint.
-    Runs as a subprocess because the CLI owns (and stops) its own
-    SparkSession."""
+    changelog into a parquet dir and exits 0 with a resumable checkpoint,
+    with exactly the rows of `changes()`. Two inputs: a table built by
+    merge() calls, and one built the way the `watch` command builds it
+    (plain `LakeTable.create` + the streaming apply). Runs as a subprocess
+    because the CLI owns (and stops) its own SparkSession."""
+    import json as _json
     import subprocess
     import sys
+    from collections import Counter
+
+    from kafka_mongo_watcher_spark.datagen import generate_events, write_event_log
+    from kafka_mongo_watcher_spark.streaming.run import run_replay_stream
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    t = _mk(spark, tmp_path, n=2)
+    merged = _mk(spark, tmp_path, n=2)
+    write_event_log(generate_events(spark, 600), str(tmp_path / "log"), n_chunks=2)
+    watched = LakeTable.create(spark, str(tmp_path / "watched"))
+    run_replay_stream(spark, log_dir=str(tmp_path / "log"), table_path=watched.path,
+                      checkpoint_dir=str(tmp_path / "ck_watch"))
+    watched.refresh()
     env = {**os.environ, "PYTHONPATH": repo, "SPARK_GRAFT_CPUS": "4",
            "KMW_DRIVER_MEMORY": "2g"}
-    p = subprocess.run(
-        [sys.executable, "-m", "kafka_mongo_watcher_spark", "tail",
-         "--table", t.path,
-         "--out", str(tmp_path / "sink"),
-         "--checkpoint", str(tmp_path / "ck_cli"),
-         "--starting-version", "0",
-         "--available-now"],
-        env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert p.returncode == 0, p.stderr[-2000:]
-    import json as _json
-
-    summary = _json.loads(p.stdout.strip().splitlines()[-1])
-    assert summary["mode"] == "tail"
-    out = spark.read.parquet(str(tmp_path / "sink"))
-    assert out.count() == t.changes(0).count()
-    assert set(out.columns) == set(t.changes(0).columns)
+    for name, t in (("merged", merged), ("watched", watched)):
+        sink = str(tmp_path / f"sink_{name}")
+        p = subprocess.run(
+            [sys.executable, "-m", "kafka_mongo_watcher_spark", "tail",
+             "--table", t.path,
+             "--out", sink,
+             "--checkpoint", str(tmp_path / f"ck_cli_{name}"),
+             "--starting-version", "0",
+             "--available-now"],
+            env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert p.returncode == 0, (name, p.stderr[-2000:])
+        summary = _json.loads(p.stdout.strip().splitlines()[-1])
+        assert summary["mode"] == "tail"
+        out = spark.read.parquet(sink)
+        want = t.changes(0).withColumn(
+            "_commit_version", F.col("_commit_version").cast("bigint")
+        )
+        assert set(out.columns) == set(want.columns)
+        want_rows = Counter(map(tuple, want.select(*_KEYCOLS).collect()))
+        assert want_rows, name
+        assert Counter(map(tuple, out.select(*_KEYCOLS).collect())) == want_rows, name

@@ -93,16 +93,19 @@ def test_stale_update_loses_to_newer_target(spark, tmp_path):
 
 
 def test_bucket_pruning_untouched_files_carried_over(spark, tmp_path):
-    """A merge touching one key must not rewrite other buckets' files —
-    the COW scale property (3% of buckets touched ⇒ 3% rewritten)."""
+    """A merge touching one key must not touch other buckets' files: base
+    files are carried over untouched and only the key's bucket gains a
+    delta file (3% of buckets touched ⇒ 3% of delta chains grow)."""
     t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=16)
     rows = [_row("insert", f"r{i}", f"p{i}", i + 1) for i in range(40)]
     t.merge(_batch(spark, rows), source_id="s", batch_id=0)
-    before = dict(t.manifest["buckets"])
+    t.compact()
+    buckets, before = dict(t.manifest["buckets"]), dict(t.manifest["deltas"])
     t.merge(_batch(spark, [_row("update", "r0", "p0", 100, "upd")]), source_id="s", batch_id=1)
-    after = t.manifest["buckets"]
-    changed = [b for b in before if before[b] != after.get(b)]
-    assert len(changed) == 1  # only the bucket containing (r0, p0)
+    assert t.manifest["buckets"] == buckets
+    after = t.manifest["deltas"]
+    changed = [b for b in after if before.get(b) != after[b]]
+    assert changed == [str(t.bucket_of("r0", "p0"))]
     assert _state(t)[("r0", "p0")] == ("commit100", "upd")
 
 

@@ -1,5 +1,5 @@
 """Partial-update application (Mongo updateDescription deltas,
-operators/patch.py + LakeTable._materialize_patches): patch rows carry only
+operators/patch.py + LakeTable._fold_patches): patch rows carry only
 the columns they change (`patch_mask` lists them); untouched columns
 inherit from table state; a masked NULL is removedFields (explicit unset).
 Reference behavior: the watcher forwards updateDescription deltas unless
@@ -44,12 +44,14 @@ def _state(t):
     }
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["compacted", "mor"])
 def test_patch_inherits_untouched_columns(spark, tmp_path, mode):
     t = LakeTable.create(spark, str(tmp_path / f"t_{mode}"), n_buckets=4,
-                         user_schema=USER_SCHEMA, write_mode=mode)
+                         user_schema=USER_SCHEMA)
     t.merge(_b(spark, [_full("insert", "p", 1), _full("insert", "q", 2)]),
             source_id="s", batch_id=0)
+    if mode == "compacted":
+        t.compact()  # patches then inherit from base files
     # patch p's content only; patch q's lang only
     t.merge(_b(spark, [
         _patch("p", 3, ["content", "content_sha256", "commit"],

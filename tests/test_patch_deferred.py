@@ -23,7 +23,6 @@ PLAIN_SCHEMA = (
 def _mk(spark, tmp_path, name="t", **kw):
     kw.setdefault("n_buckets", 4)
     kw.setdefault("user_schema", USER_SCHEMA)
-    kw.setdefault("write_mode", "mor")
     return LakeTable.create(spark, str(tmp_path / name), **kw)
 
 
@@ -69,31 +68,25 @@ def test_deferred_merge_appends_masked_deltas(spark, tmp_path):
 
 
 def test_deferred_equals_eager_state(spark, tmp_path):
-    """kmw.patch.deferred=false forces the eager read-modify-write path;
-    final state must be byte-identical either way."""
+    """The deferred state is byte-identical to what applying each patch
+    eagerly to the stored row gives: untouched columns inherited, the row's
+    commit_seq advanced to the patch's."""
     t_def = _mk(spark, tmp_path, "t_def")
     _seed(spark, t_def)
     t_def.merge(_patch_batch(spark), source_id="s", batch_id=1)
-    spark.conf.set("kmw.patch.deferred", "false")
-    try:
-        t_eag = _mk(spark, tmp_path, "t_eag")
-        _seed(spark, t_eag)
-        stats = t_eag.merge(_patch_batch(spark), source_id="s", batch_id=1)
-        assert stats["dedup_strategy"] == "patch_fold"
-        assert t_eag.manifest["masked_buckets"] == []
-    finally:
-        spark.conf.unset("kmw.patch.deferred")
     cols = ["repo", "path", "commit", "lang", "content", "content_sha256",
             "commit_seq"]
     got_def = sorted(map(tuple, t_def.snapshot().select(*cols).collect()))
-    got_eag = sorted(map(tuple, t_eag.snapshot().select(*cols).collect()))
-    assert got_def == got_eag
+    assert got_def == [
+        ("r", "p", "commit1", "py", "c2", "sha3", 3),
+        ("r", "q", "commit2", "go", "c", "sha2", 4),
+    ]
 
 
 def test_deferred_ingest_never_reads_table_state(spark, tmp_path, monkeypatch):
     """The whole point: patch ingest is a blind append. Poison every state
-    read (read_buckets backs both the eager state join and lookup) — the
-    deferred merge must not trigger one."""
+    read (read_buckets backs every bucket scan) — the deferred merge must
+    not trigger one."""
     t = _mk(spark, tmp_path)
     _seed(spark, t)
 
@@ -195,19 +188,44 @@ def test_plain_batch_delete_then_patch_does_not_leak_predelete_values(
     assert _state(t) == {"p": (None, "go", None, None)}
 
 
-def test_wide_table_falls_back_to_eager(spark, tmp_path):
-    """>62 payload columns can't fit the bigint mask — the merge must take
-    the eager materialization path and leave the bucket unmasked."""
+def test_wide_table_stays_deferred(spark, tmp_path):
+    """64 payload columns overflow the bigint `_write_mask`: positions >= 62
+    spill into `_write_mask_ext`, so a wide table still takes the blind
+    patch_append path, and compaction retires both masks."""
     wide = USER_SCHEMA + [(f"x{i:02d}", "string") for i in range(60)]
-    t = _mk(spark, tmp_path, user_schema=wide)  # 64 payload columns
+    payload = [n for n, _ in wide if n not in ("repo", "path")]
+    assert len(payload) == 64 and payload.index("x59") == 63
+    t = _mk(spark, tmp_path, user_schema=wide)
     _seed(spark, t)
     stats = t.merge(_patch_batch(spark), source_id="s", batch_id=1)
-    assert stats["dedup_strategy"] == "patch_fold"
+    assert stats["dedup_strategy"] == "patch_append"
+    assert t.manifest["masked_buckets"]
+    # a patch writing only x59 sets exactly that column's bit
+    stats = t.merge(spark.createDataFrame(
+        [(0, 5, "update", "r", "p", None, None, None, None, 5, ["x59"], "v59")],
+        SCHEMA + ", x59 string",
+    ), source_id="s", batch_id=2)
+    assert stats["dedup_strategy"] == "patch_append"
+    (row,) = t.changes(t.version - 1, t.version).collect()
+    assert row["_write_mask"] == 0 and row["_write_mask_ext"] == [1 << 1]
+    ext = row["_write_mask_ext"]
+    assert {c for i, c in enumerate(payload)
+            if (ext[i // 62 - 1] if i >= 62 else row["_write_mask"]) >> (i % 62) & 1
+            } == {"x59"}
+
+    def wide_state():
+        return {r["path"]: (r["commit"], r["lang"], r["content"],
+                            r["content_sha256"], r["x59"])
+                for r in t.snapshot().collect()}
+
+    want = {"p": WANT["p"] + ("v59",), "q": WANT["q"] + (None,)}
+    assert wide_state() == want
+    t.compact()
     assert t.manifest["masked_buckets"] == []
-    assert {k: v[:4] for k, v in
-            {r["path"]: (r["commit"], r["lang"], r["content"],
-                         r["content_sha256"]) for r in t.snapshot().collect()
-             }.items()} == WANT
+    assert wide_state() == want
+    stored = t._read_files(t._files_of("buckets", list(t.manifest["buckets"])))
+    assert stored.filter(F.col("_write_mask").isNotNull()
+                         | F.col("_write_mask_ext").isNotNull()).count() == 0
 
 
 def test_deferred_with_schema_evolution_new_column(spark, tmp_path):
@@ -236,7 +254,7 @@ def test_deferred_with_schema_evolution_new_column(spark, tmp_path):
 def test_changes_partial_rows_distinguish_set_null_from_untouched(spark, tmp_path):
     """CDC out of the lake: a masked NULL (explicit unset) is visible as
     mask-bit-set + NULL value; an untouched column is mask-bit-unset —
-    a distinction eager materialization could not express."""
+    a distinction a full-row changelog could not express."""
     t = _mk(spark, tmp_path)
     _seed(spark, t)
     t.merge(_b(spark, [

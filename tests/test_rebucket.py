@@ -11,10 +11,8 @@ from kafka_mongo_watcher_spark.plans.lake import LakeTable
 from tests.test_lake_mor import _batch, _row, _state
 
 
-def _seed(spark, tmp_path, mode="mor", n_buckets=4):
-    t = LakeTable.create(
-        spark, str(tmp_path / "rb"), n_buckets=n_buckets, write_mode=mode
-    )
+def _seed(spark, tmp_path, n_buckets=4):
+    t = LakeTable.create(spark, str(tmp_path / "rb"), n_buckets=n_buckets)
     t.merge(_batch(spark, [_row("insert", "r", f"p{i}", 1) for i in range(40)]),
             source_id="s", batch_id=0)
     t.merge(_batch(spark, [

@@ -131,6 +131,8 @@ def test_zorder_bits_clamped_to_63(spark, tmp_path):
     assert stats["hi"] < (1 << 60)
     with pytest.raises(ValueError, match="at most 63"):
         t._zorder_expr(df.select(F.col("c0")), [f"x{i}" for i in range(64)])
+    with pytest.raises(ValueError, match="at least one column"):
+        t._zorder_expr(df, [])  # was ZeroDivisionError
 
 
 def test_zorder_clustering_still_effective(spark, tmp_path):

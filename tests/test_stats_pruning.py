@@ -24,9 +24,7 @@ from tests.test_lake_mor import _batch, _row
 
 
 def _mk(spark, tmp_path, mode, **kw):
-    return LakeTable.create(
-        spark, str(tmp_path / f"t_{mode}"), n_buckets=2, write_mode=mode, **kw
-    )
+    return LakeTable.create(spark, str(tmp_path / f"t_{mode}"), n_buckets=2, **kw)
 
 
 def _merge_range(t, spark, lo, hi, seq, op="insert", content="c"):
@@ -118,10 +116,14 @@ def test_compaction_refreshes_stats_and_keeps_pruning(spark, tmp_path):
     assert len(got) == 1 and got[0]["content"] == "v2"
 
 
-def test_cow_writes_record_stats_and_prune(spark, tmp_path):
-    t = _mk(spark, tmp_path, "cow")
+def test_recompacted_buckets_record_stats_and_prune(spark, tmp_path):
+    """Each compaction replaces a bucket's base files and their stats
+    entries wholesale: no stale bounds survive a second rewrite."""
+    t = _mk(spark, tmp_path, "mor")
     _merge_range(t, spark, 0, 60, seq=1)
+    t.compact()
     _merge_range(t, spark, 20, 30, seq=2, op="update", content="v2")
+    t.compact()
     for b in t.manifest["buckets"]:
         assert set(t._stats_of(b)) == set(t._entry_files("buckets", b))
     got = t.lookup("repo_0025", "main.py").collect()
@@ -203,12 +205,14 @@ def test_key_sorted_writes_make_multi_file_base_prunable(spark, tmp_path):
         assert t.lookup(f"repo_{i:04d}", "main.py").count() == 1
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor", "compacted"])
 def test_lookup_plans_zero_jobs_for_pruning(spark, tmp_path, mode):
     """Planning a lookup (bucket + file pruning) runs no Spark job — the
     returned DataFrame is the first thing that touches the cluster."""
     t = _mk(spark, tmp_path, mode)
     _merge_range(t, spark, 0, 20, seq=1)
+    if mode == "compacted":
+        t.compact()
     sc = spark.sparkContext
     before = sc._jsc.sc().dagScheduler().nextJobId()
     df = t.lookup("repo_0003", "main.py")

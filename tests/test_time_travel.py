@@ -9,7 +9,7 @@ import pytest
 
 from kafka_mongo_watcher_spark.plans.lake import LakeTable
 
-from tests.test_lake_mor import _batch, _row, _state
+from tests.test_lake_mor import _batch, _row, _state, legacy_cow_table
 
 
 @pytest.fixture()
@@ -91,10 +91,45 @@ def test_changes_emits_per_commit_lww_winners_and_skips_compaction(seq_table):
 
 
 def test_changes_requires_mor(spark, tmp_path):
-    t = LakeTable.create(spark, str(tmp_path / "cw"), n_buckets=4, write_mode="cow")
-    t.merge(_batch(spark, [_row("insert", "r", "p", 1)]), source_id="s", batch_id=0)
+    t = legacy_cow_table(spark, str(tmp_path / "cw"))
     with pytest.raises(ValueError, match="merge-on-read"):
         t.changes(0).collect()
+
+
+def test_legacy_cow_manifests_keep_working(spark, tmp_path):
+    """Tables committed copy-on-write by an older engine (manifests stamped
+    or defaulted `write_mode: "cow"`) load, read, look up, time-travel and
+    roll back; their next merge appends deltas and stamps "mor", and the
+    changelog still refuses any range holding a COW merge."""
+    with pytest.raises(ValueError, match="compact"):
+        LakeTable.create(spark, str(tmp_path / "new"), write_mode="cow")
+    t = legacy_cow_table(spark, str(tmp_path / "legacy"))
+    legacy = {("r", "p"): ("commit1", "c", 1), ("r", "q"): ("commit2", "c", 2)}
+    assert [h["write_mode"] for h in t.history()] == ["cow", "cow", "cow"]
+    assert t.manifest["buckets"] and not t.manifest["deltas"]
+    assert _state(t) == legacy
+    assert t.lookup("r", "q").collect()[0]["commit_seq"] == 2
+    assert _state(t.at_version(1)) == legacy
+
+    base = dict(t.manifest["buckets"])
+    st = t.merge(_batch(spark, [_row("update", "r", "p", 5, "v5"),
+                                _row("delete", "r", "q", 6)]),
+                 source_id="s", batch_id=1)                     # v3
+    assert st["touched_buckets"] >= 1
+    assert t.manifest["write_mode"] == "mor"
+    assert t.manifest["buckets"] == base and t.manifest["deltas"]
+    assert _state(t) == {("r", "p"): ("commit5", "v5", 5)}
+    assert t.lookup("r", "q").collect() == []
+    assert {(r["path"], r["_change_type"]) for r in t.changes(2).collect()} == {
+        ("p", "upsert"), ("q", "delete"),
+    }
+    for since in (0, 1):
+        with pytest.raises(ValueError, match="copy-on-write"):
+            t.changes(since).collect()
+
+    assert t.rollback(2)["version"] == 4
+    assert _state(t) == legacy
+    assert _state(LakeTable(spark, t.path)) == legacy
 
 
 def test_changes_plan_reads_only_delta_files(seq_table):
