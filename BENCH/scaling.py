@@ -150,8 +150,8 @@ def run_at(n_executors: int, n_events: int, n_batches: int, pkg: str) -> dict:
         "--conf", "spark.python.worker.reuse=true",
         "--conf", f"spark.executorEnv.PYTHONPATH={REPO}",
     ]
-    # engine conf overrides, e.g. KMW_SCALING_EXTRA_CONFS=
-    #   "spark.kmw.dedup.semijoinMaxBroadcastBytes=134217728"
+    # extra Spark conf, e.g. KMW_SCALING_EXTRA_CONFS=
+    #   "spark.sql.shuffle.partitions=64" (the engine itself has no conf keys)
     for kv in filter(None, os.environ.get("KMW_SCALING_EXTRA_CONFS", "").split(",")):
         cmd += ["--conf", kv]
     evdir = os.environ.get("KMW_EVENTLOG_DIR")

@@ -399,7 +399,7 @@ def main() -> None:
             "dedup_strategy": strategies,
             "patch_stats": patch_stats,
             "scd2_stats": scd2_stats,
-            "parquet_bloom_filters": True,  # kmw.write.parquetBloom default
+            "parquet_bloom_filters": True,  # the writer always emits them
             "mor_compact_included": True,
             "shuffle_partitions": max(int(cpus) * 2, 16),
             "max_partition_bytes": 33554432,

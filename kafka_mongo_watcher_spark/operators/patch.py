@@ -35,18 +35,24 @@ Ordering contract
 WITHIN a batch, arbitrary arrival order is fine — the fold orders by
 ``(commit_seq, offset)``. ACROSS batches, per-column resolution relies on
 the change stream's per-key ordered delivery (the oplog contract the
-reference tails): the stored row carries one ``commit_seq``, so a later
-batch delivering an OLDER patch is rejected whole by row-level LWW rather
-than column-merged. True cross-batch out-of-order patching would need
-per-column versions in storage — deliberately out of scope, matching what
-ordered CDC sources guarantee. Batch-CUT invariance over in-order streams
-is property-tested (tests/test_patch.py).
+reference tails). A later batch delivering an OLDER patch wins the columns
+no newer event writes only while the newer rows are still deltas;
+compaction stores one full row carrying the newest ``commit_seq``, after
+which such a patch loses every column. True cross-batch out-of-order
+patching would need per-column versions in storage — deliberately out of
+scope, matching what ordered CDC sources guarantee. Batch-CUT invariance
+over in-order streams is property-tested (tests/test_patch.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def patch_row() -> Column:
+    """True on a PATCH row (see the batch convention above)."""
+    return (F.col("op") == "update") & F.col("patch_mask").isNotNull()
 
 
 def fold_patch_batch(
@@ -69,7 +75,7 @@ def fold_patch_batch(
     """
     mask_aliases = mask_aliases or {}
     ordk = F.struct(*[F.col(c) for c in order_cols])
-    is_patch = (F.col("op") == "update") & F.col("patch_mask").isNotNull()
+    is_patch = patch_row()
     aggs: list[Column] = []
     for c in payload_cols:
         writes = (~is_patch) | F.array_contains(

@@ -16,7 +16,7 @@ sink. The design choices are the ones that matter at 100 TB:
   appends ONLY the winner rows as per-bucket delta files — write cost is
   O(batch), independent of table size — and readers resolve LWW across
   base+delta at scan time, only for buckets that actually have deltas.
-  Per-bucket auto-compaction (`kmw.mor.maxDeltasPerBucket`) folds deltas
+  Per-bucket auto-compaction (`MAX_DELTAS_PER_BUCKET`) folds deltas
   back into the base, bounding read amplification; `compact()` does the
   full fold and is the read-optimized layout. Tables written copy-on-write
   by older engines (manifests stamped `write_mode: "cow"`) load and read
@@ -68,18 +68,35 @@ from kafka_mongo_watcher_spark.operators.dedup import (
     lww_dedup_salted,
     lww_dedup_semijoin,
 )
+from kafka_mongo_watcher_spark.operators.patch import fold_patch_batch, patch_row
 
-def _conf(spark: SparkSession, key: str, default: str) -> str:
-    """Engine conf lookup: the bare `kmw.X` first — a bare key can only get
-    into the conf via a runtime `spark.conf.set`, so a runtime set always
-    wins (ADVICE r2: the old spark.-first order silently ignored runtime
-    sets whenever the alias was also passed at submit) — then the
-    `spark.kmw.X` alias (settable via `spark-submit --conf`, which silently
-    drops non-`spark.` keys), then the default."""
-    v = spark.conf.get(key, None)
-    if v is not None:
-        return v
-    return spark.conf.get(f"spark.{key}", default)
+
+#: Delta files a bucket may hold before a merge auto-compacts it.
+MAX_DELTAS_PER_BUCKET = 8
+#: Bucket file lists longer than this spill out of the manifest into an
+#: immutable sidecar blob (the manifest stays O(buckets)).
+INLINE_MAX_FILES_PER_BUCKET = 8
+#: Commits writing more files than this collect footer stats in a Spark
+#: job instead of on the driver.
+DRIVER_FOOTER_MAX = 64
+#: Cap on each key column's parquet Bloom filter. The adaptive writer picks
+#: among 5 candidates sized max.bytes / 2^i, so parquet-mr's 1 MB default
+#: floors every tiny delta file at a 64 KB filter; 128 KB keeps the floor at
+#: 8 KB while covering ~100k-distinct-key row groups at ~1% FPP (bigger row
+#: groups degrade FPP gracefully — pruning weakens, never breaks).
+PARQUET_BLOOM_MAX_BYTES = 131072
+#: Semijoin winner-set broadcast budget. Measured A/B at 4M-event batches
+#: (~79 MB winner broadcast): semijoin beats the window path by ~1.5x end-
+#: to-end (157k vs 103k ev/s at 4x4-core executors) — the payload shuffle
+#: it avoids costs far more than the bigger broadcast. Spark's safe
+#: broadcast envelope at stock executor memory.
+SEMIJOIN_MAX_BROADCAST_BYTES = 128 << 20
+#: Winners/events ratio above which semijoin stops paying (see merge()).
+SEMIJOIN_MAX_WINNER_RATIO = 0.3
+#: Batches smaller than this skip the winner-ratio gate.
+RATIO_MIN_EVENTS = 50000
+#: Salts of the two-phase salted dedup route.
+N_SALTS = 16
 
 
 # Safe type-promotion lattice (Iceberg ALTER COLUMN TYPE rules). A batch
@@ -144,25 +161,22 @@ class ConcurrentCommitError(RuntimeError):
     winner's state (batch-id fencing keeps the retry exactly-once)."""
 
 
-def _footer_file_entry(
-    abs_path: str, with_blooms: bool = True, with_colstats: bool = True
-):
+def _footer_file_entry(abs_path: str):
     """One manifest file_stats entry: [repo_min, repo_max, path_min,
     path_max, rows] plus, when the writer emitted parquet-native Bloom
     filters on the key columns, a 6th element with their per-row-group
-    offsets (see plans/parquet_bloom.py), plus (kmw.stats.columns, default
-    on) a 7th element with per-column min/max/null bounds for the non-key
-    columns — the Iceberg manifest lower_bounds/upper_bounds analog that
-    `LakeTable.scan` prunes against. Readers tolerate every prefix shape."""
-    s = _footer_key_stats(abs_path)
-    if s is None or not (with_blooms or with_colstats):
-        return s
-    locs = None
-    if with_blooms:
-        from kafka_mongo_watcher_spark.plans.parquet_bloom import bloom_locators
+    offsets (see plans/parquet_bloom.py), plus a 7th element with
+    per-column min/max/null bounds for the non-key columns — the Iceberg
+    manifest lower_bounds/upper_bounds analog that `LakeTable.scan` prunes
+    against. Readers tolerate every prefix shape (older engines wrote
+    entries without the 6th and 7th elements)."""
+    from kafka_mongo_watcher_spark.plans.parquet_bloom import bloom_locators
 
-        locs = bloom_locators(abs_path)
-    cols = _footer_column_stats(abs_path) if with_colstats else None
+    s = _footer_key_stats(abs_path)
+    if s is None:
+        return None
+    locs = bloom_locators(abs_path)
+    cols = _footer_column_stats(abs_path)
     if cols:
         return s + [locs or None, cols]
     return s + [locs] if locs else s
@@ -502,11 +516,10 @@ class LakeTable:
         an immutable sidecar blob. Entries already in ref form (carried over
         from the previous manifest, bucket unchanged) are kept verbatim —
         zero IO for unchanged buckets."""
-        cap = int(_conf(self.spark, "kmw.manifest.inlineMaxFilesPerBucket", "8"))
         out = {}
         blob_dir = os.path.join(self.path, "_manifests", "blobs")
         for b, e in entries.items():
-            if not _is_ref(e) and len(e) > cap:
+            if not _is_ref(e) and len(e) > INLINE_MAX_FILES_PER_BUCKET:
                 os.makedirs(blob_dir, exist_ok=True)
                 # branch commits namespace their blobs: a dropped branch's
                 # version numbers can be reused by main, and blob refs must
@@ -541,34 +554,24 @@ class LakeTable:
         return e if isinstance(e, dict) else {}
 
     def _collect_key_stats(self, rel_files: list[str]) -> dict:
-        """Footer-only stats for freshly written files: key min/max bounds
-        plus (kmw.stats.bloomLocators, default on) the offsets of any
-        parquet-native Bloom filters the writer emitted, so `lookup` can
-        range-read and probe them without re-parsing footers. Driver-side
-        for small batches (O(ms) per local footer read); a tiny Spark job
-        past `kmw.stats.driverFooterMax` so a 10^4-file commit never
-        serializes footer IO through the driver. Disable with
-        kmw.stats.collect=false."""
-        if _conf(self.spark, "kmw.stats.collect", "true") != "true" or not rel_files:
+        """Footer-only stats for freshly written files: key min/max bounds,
+        per-column bounds, and the offsets of any parquet-native Bloom
+        filters the writer emitted, so `lookup` can range-read and probe
+        them without re-parsing footers. Driver-side for small batches
+        (O(ms) per local footer read); a tiny Spark job past
+        `DRIVER_FOOTER_MAX` files so a 10^4-file commit never serializes
+        footer IO through the driver."""
+        if not rel_files:
             return {}
         root = self.path
-        with_blooms = _conf(self.spark, "kmw.stats.bloomLocators", "true") == "true"
-        with_cols = _conf(self.spark, "kmw.stats.columns", "auto") != ""
-        cap = int(_conf(self.spark, "kmw.stats.driverFooterMax", "64"))
-        if len(rel_files) <= cap:
-            pairs = [
-                (rf, _footer_file_entry(os.path.join(root, rf), with_blooms, with_cols))
-                for rf in rel_files
-            ]
+        if len(rel_files) <= DRIVER_FOOTER_MAX:
+            pairs = [(rf, _footer_file_entry(os.path.join(root, rf))) for rf in rel_files]
         else:
             rdd = self.spark.sparkContext.parallelize(
                 rel_files, max(1, len(rel_files) // 16)
             )
             pairs = rdd.map(
-                lambda rf: (
-                    rf,
-                    _footer_file_entry(os.path.join(root, rf), with_blooms, with_cols),
-                )
+                lambda rf: (rf, _footer_file_entry(os.path.join(root, rf)))
             ).collect()
         return {rf: s for rf, s in pairs if s is not None}
 
@@ -800,14 +803,22 @@ class LakeTable:
             return hi is not None and _cmp_ok(hi, val) and hi < val
         raise ValueError(f"unknown scan op {op!r}")
 
+    #: Column types whose footer stats every engine version tracked.
+    _FLAT_TYPES = frozenset(
+        ("string", "tinyint", "smallint", "int", "bigint", "float", "double", "boolean")
+    )
+
     @classmethod
-    def _stats_refute(cls, stats, col: str, op: str, val) -> bool:
+    def _stats_refute(cls, stats, col: str, op: str, val, col_type: str) -> bool:
         """True only when this file's footer-stats entry PROVES no stored
-        value of `col` can satisfy the (null-rejecting) predicate. Missing
-        stats, missing colstats section, or an unusable column entry are
-        all inconclusive → keep the file. A column ABSENT from a present
-        colstats dict was not in the file (pre-evolution write): every row
-        reads NULL there, which refutes any null-rejecting op."""
+        value of `col` (typed `col_type` by the table) can satisfy the
+        (null-rejecting) predicate. Missing stats, missing colstats section,
+        or an unusable column entry are all inconclusive → keep the file. A
+        column ABSENT from a present colstats dict was not in the file
+        (pre-evolution write) — every row reads NULL there, which refutes
+        any null-rejecting op — but only for a flat primitive, non-`_`
+        column: manifests written before the round-5 stats fix omitted
+        every other column even when the file held it."""
         if not stats:
             return False
         rows = stats[4]
@@ -828,6 +839,8 @@ class LakeTable:
         if colstats is None:
             return False
         if col not in colstats:
+            if col_type not in cls._FLAT_TYPES or col.startswith("_"):
+                return False
             # column absent from the file → all NULL: matches is_null,
             # refutes every other (null-rejecting) op
             return op != "is_null"
@@ -884,14 +897,14 @@ class LakeTable:
         bounds, and delta files carry tight per-batch `commit_seq`
         bounds, so key ranges and "recent changes" predicates touch a
         tiny fraction of files."""
-        allowed = {n for n, _ in self.manifest["user_schema"]} | {"commit_seq"}
+        types = {n: t for n, t in self.manifest["user_schema"]} | {"commit_seq": "bigint"}
 
         def _parse_clause(clause):
             col, op, val = clause
             if op not in self._SCAN_OPS:
                 raise ValueError(f"scan op must be one of {self._SCAN_OPS}, got {op!r}")
-            if col not in allowed:
-                raise ValueError(f"scan column {col!r} not in {sorted(allowed)}")
+            if col not in types:
+                raise ValueError(f"scan column {col!r} not in {sorted(types)}")
             if op == "between":
                 val = tuple(val)
                 if len(val) != 2:
@@ -912,7 +925,7 @@ class LakeTable:
 
         def _refuted(stats) -> bool:
             return bool(groups) and all(
-                any(self._stats_refute(stats, c, o, v) for c, o, v in g)
+                any(self._stats_refute(stats, c, o, v, types[c]) for c, o, v in g)
                 for g in groups
             )
 
@@ -1331,19 +1344,18 @@ class LakeTable:
     def _lookup_files(self, repo: str, path: str) -> tuple[list[str], list[str]]:
         """(base_files, delta_files) a point read must scan: the key's
         bucket's files, minus every file whose footer key-bounds prove the
-        key absent, minus (kmw.lookup.bloom, default on) every file whose
-        parquet-native Bloom filters prove it absent — the level that pays
+        key absent, minus every file whose parquet-native Bloom filters
+        prove it absent — the level that pays
         off on DELTA files, whose random-key bounds span the whole keyspace
         and never min/max-prune. Relative paths; driver-side, zero Spark
         jobs; bloom probes are cached range-reads."""
         b = str(self.bucket_of(repo, path))
         stats = self._stats_of(b)
-        use_bloom = _conf(self.spark, "kmw.lookup.bloom", "true") == "true"
         keep = lambda fs: [  # noqa: E731
             f
             for f in fs
             if self._file_may_contain(stats.get(f), repo, path)
-            and not (use_bloom and self._bloom_excludes(f, stats.get(f), repo, path))
+            and not self._bloom_excludes(f, stats.get(f), repo, path)
         ]
         return (
             keep(self._entry_files("buckets", b)),
@@ -1385,8 +1397,8 @@ class LakeTable:
         return F.pmod(F.xxhash64(*[F.col(c) for c in KEY_COLS]), F.lit(self.n_buckets)).cast("int")
 
     def _write(self, df: DataFrame):
-        """`df.write` with parquet-native Bloom filters on the key columns
-        (kmw.write.parquetBloom, default on). The WRITER pays for the filter
+        """`df.write` with parquet-native Bloom filters on the key columns.
+        The WRITER pays for the filter
         — it already holds every row, and parquet-mr hashes JVM-side while
         encoding — so commit time gains no extra job, shuffle, or read-back;
         point reads get a third pruning level (see plans/parquet_bloom.py).
@@ -1395,34 +1407,18 @@ class LakeTable:
         filters exactly), so low-cardinality columns like `repo` cost
         nothing extra."""
         w = df.write
-        if _conf(self.spark, "kmw.write.parquetBloom", "true") == "true":
-            for c in KEY_COLS:
-                w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-            w = w.option("parquet.bloom.filter.adaptive.enabled", "true")
-            # the adaptive writer picks among 5 candidates sized max.bytes /
-            # 2^i, so the DEFAULT 1 MB cap floors every tiny delta file at a
-            # 64 KB filter; 128 KB keeps the floor at 8 KB while covering
-            # ~100k-distinct-key row groups at ~1% FPP (bigger row groups
-            # degrade FPP gracefully — pruning weakens, never breaks)
-            w = w.option(
-                "parquet.bloom.filter.max.bytes",
-                _conf(self.spark, "kmw.write.parquetBloomMaxBytes", "131072"),
-            )
-        return w
+        for c in KEY_COLS:
+            w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
+        return w.option("parquet.bloom.filter.adaptive.enabled", "true").option(
+            "parquet.bloom.filter.max.bytes", str(PARQUET_BLOOM_MAX_BYTES)
+        )
 
     def _writer_count(self) -> int:
         """Write-stage task count: min(n_buckets, max(32, cluster
         parallelism)) — scales with executors instead of r2's hard 32 cap,
         while never planning more tasks than buckets (each bucket hashes to
-        exactly one writer). `kmw.mor.maxWriters` overrides the
-        cluster-derived ceiling."""
-        ceiling = int(
-            _conf(
-                self.spark,
-                "kmw.mor.maxWriters",
-                str(max(32, self.spark.sparkContext.defaultParallelism)),
-            )
-        )
+        exactly one writer)."""
+        ceiling = max(32, self.spark.sparkContext.defaultParallelism)
         return max(1, min(ceiling, self.n_buckets))
 
     def _fold_patches(self, batch: DataFrame) -> DataFrame:
@@ -1432,7 +1428,6 @@ class LakeTable:
         combinable hash aggregate, no state read. The folded rows carry one
         `_w_{c}` flag per payload column ("some batch event wrote c")."""
         from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
-        from kafka_mongo_watcher_spark.operators.patch import fold_patch_batch
 
         if "content_raw" in batch.columns:
             # fingerprint BEFORE the fold so the patch columns align with
@@ -1441,8 +1436,7 @@ class LakeTable:
             # its content value ignored by the fold anyway, so don't pay
             # normalization+sha bytes for it (the pandas UDF passes nulls
             # through for free)
-            is_patch = (F.col("op") == "update") & F.col("patch_mask").isNotNull()
-            writes_content = (~is_patch) | F.array_contains(
+            writes_content = (~patch_row()) | F.array_contains(
                 F.col("patch_mask"), F.lit("content")
             )
             batch = batch.withColumn(
@@ -1473,16 +1467,18 @@ class LakeTable:
         source_id: str = "default",
         batch_id: int | None = None,
         salted: bool = False,
-        n_salts: int = 16,
     ) -> dict:
         """Apply a change batch: LWW dedup → per-bucket delta append →
         atomic snapshot commit. `batch` columns: repo, path, op, commit_seq,
         offset, partition_id, plus payload columns (commit, content,
         content_sha256, lang, ...). An optional `patch_mask` column
         (array<string>) marks 'update' rows as PARTIAL updates (Mongo
-        updateDescription deltas) writing only the masked columns; they are
-        appended as masked deltas (see `_resolve_lww_columns`). Returns
-        per-merge stats incl. per-partition lineage."""
+        updateDescription deltas) writing only the masked columns. A batch
+        holding at least one such row is appended as masked deltas (see
+        `_resolve_lww_columns`); any other batch drops the column (NULL
+        mask = full row) and takes a dedup route. `salted=True` forces the
+        salted dedup route for plain batches. Returns per-merge stats incl.
+        per-partition lineage."""
         self._assert_writable()
         import time as _time
 
@@ -1520,18 +1516,16 @@ class LakeTable:
         sc.setJobDescription(f"merge[{source_id}/{batch_id}]: tuple+lineage agg")
         order_cols = [c for c in ("commit_seq", "offset") if c in batch.columns]
         _dedup_caches: list = []
-        # Partial updates (Mongo updateDescription deltas): fold the batch
-        # per column into one PARTIAL row per key and append it as a masked
-        # delta — a blind write, no state read at ingest, no persist, no
-        # bucket-id collect; reads and compaction resolve per column
-        # (_resolve_lww_columns). Dedup below is then a no-op and is
-        # skipped. Lineage/tuples still count the RAW deliveries.
-        patched = "patch_mask" in batch.columns
-        lineage_src = batch.drop("patch_mask") if patched else batch
-        if patched:
-            batch = self._fold_patches(batch)
+        # The batch's own rows choose the partial-update route: `_patch`
+        # marks patch rows and widens the tuple grouping (a true duplicate
+        # delivery carries the same mask, so no tuple splits), and the
+        # lineage agg below ORs it per partition — no extra job.
+        is_patch = patch_row() if "patch_mask" in batch.columns else F.lit(False)
         tuples = key_order_tuples(
-            lineage_src, KEY_COLS, order_cols, extra_cols=("partition_id",)
+            batch.withColumn("_patch", is_patch),
+            KEY_COLS,
+            order_cols,
+            extra_cols=("partition_id", "_patch"),
         ).persist()
         _dedup_caches.append(tuples)
         off_col = "offset" if "offset" in order_cols else order_cols[-1]
@@ -1547,9 +1541,21 @@ class LakeTable:
                 F.approx_count_distinct(F.xxhash64(*KEY_COLS)).alias("keys_est"),
                 F.sum(_klen * F.col("_cnt")).alias("key_bytes"),
                 F.max("_cnt").alias("max_cnt"),
+                F.max("_patch").alias("patches"),
             )
             .collect()
         )
+        # Partial updates (Mongo updateDescription deltas): fold the batch
+        # per column into one PARTIAL row per key and append it as a masked
+        # delta — a blind write, no state read at ingest, no persist, no
+        # bucket-id collect; reads and compaction resolve per column
+        # (_resolve_lww_columns). Dedup below is then a no-op and is
+        # skipped. Lineage/tuples still count the RAW deliveries.
+        patched = any(r["patches"] for r in lineage_rows)
+        if patched:
+            batch = self._fold_patches(batch)
+        elif "patch_mask" in batch.columns:
+            batch = batch.drop("patch_mask")
         n_batch_events = sum(r["events"] for r in lineage_rows)
         # EXACT duplicate-delivery gate, zero extra jobs: a tuple delivered
         # twice lands in the same source partition (partition_id is key-
@@ -1575,22 +1581,10 @@ class LakeTable:
         #   salted   — two-phase max_by for skewed keys (explicit salting).
         # Dedup runs BEFORE the pandas-UDF fingerprint: only winner rows pay
         # the Python roundtrip (collision factor × less Arrow traffic).
-        strategy = _conf(self.spark, "kmw.dedup.strategy", "auto")
-        # 128 MiB default: measured A/B at 4M-event batches (~79 MB winner
-        # broadcast), semijoin beats the window path by ~1.5x end-to-end
-        # (157k vs 103k ev/s at 4x4-core executors) — the payload shuffle it
-        # avoids costs far more than the bigger broadcast. Still byte-
-        # bounded and still falls back to window beyond the budget.
-        semijoin_max_bytes = int(
-            _conf(self.spark, "kmw.dedup.semijoinMaxBroadcastBytes", str(128 << 20))
-        )
         # The broadcast winner set is ~1 tuple per distinct key: size it in
-        # BYTES against the budget (128 MiB default — see above; Spark's safe broadcast
-        # envelope at stock executor memory). An explicitly requested
-        # 'semijoin' also falls back when over budget (ADVICE r1: a snapshot
-        # -load batch must never force an unbounded broadcast).
+        # BYTES against SEMIJOIN_MAX_BROADCAST_BYTES (ADVICE r1: a snapshot-
+        # load batch must never force an unbounded broadcast).
         est_winner_bytes = n_keys_ub * avg_bcast_row
-        semijoin_fits = est_winner_bytes <= semijoin_max_bytes
         # Semijoin is only PROFITABLE when dedup actually removes rows: its
         # win is the loser payload never shuffling, its cost is building +
         # broadcasting the winner set (driver collect, per-executor fetch,
@@ -1604,43 +1598,32 @@ class LakeTable:
         # and the r2 A/B at ratio ~0.15 had semijoin 1.5x ahead of window.
         # Crossover ~0.3; above it the two-phase salted max_by (map-side
         # combine, no broadcast) wins and keeps winning as batches shrink.
-        # The ratio gate only engages above a minimum batch size: below it
+        # The ratio gate only engages above RATIO_MIN_EVENTS: below it
         # every strategy is fixed-cost-dominated (ms either way) and
         # semijoin's single-branch/dup-branch machinery stays the exercised
         # default.
         winner_ratio = n_keys_ub / max(n_batch_events, 1)
-        semijoin_profitable = winner_ratio <= float(
-            _conf(self.spark, "kmw.dedup.semijoinMaxWinnerRatio", "0.3")
-        ) or n_batch_events < int(
-            _conf(self.spark, "kmw.dedup.ratioMinEvents", "50000")
+        semijoin_profitable = (
+            winner_ratio <= SEMIJOIN_MAX_WINNER_RATIO
+            or n_batch_events < RATIO_MIN_EVENTS
         )
-        if strategy == "auto":
-            if salted:
-                strategy = "salted"
-            elif not semijoin_profitable:
-                strategy = "salted"
-            elif semijoin_fits:
-                # micro-batch with real duplication: winner tuples
-                # comfortably broadcastable and the saved loser shuffle
-                # outweighs the broadcast. Beyond the byte budget, the
-                # broadcast (driver collect + per-executor fetch)
-                # anti-scales with cluster size — the shuffling window
-                # path wins.
-                strategy = "semijoin"
-            else:
-                strategy = "window"
-        elif strategy == "semijoin" and not semijoin_fits:
-            strategy = "window"
         if patched:
             # the patch fold already produced exactly one row per key
-            winners = batch
             strategy = "patch_append"
-        elif strategy == "semijoin":
-            # Winner set built FROM the cached tuples: the broadcast build
-            # inside the write job runs one narrow agg over the cache — no
-            # batch re-scan, no separate gate job (has_dups came free with
-            # the lineage agg above). Winners persist only on the dup
-            # branch, where clean/dup split references the plan twice.
+            winners = batch
+        elif salted or not semijoin_profitable:
+            strategy = "salted"
+            winners = lww_dedup_salted(batch, n_salts=N_SALTS)
+        elif est_winner_bytes <= SEMIJOIN_MAX_BROADCAST_BYTES:
+            # micro-batch with real duplication: winner tuples comfortably
+            # broadcastable and the saved loser shuffle outweighs the
+            # broadcast. Winner set built FROM the cached tuples: the
+            # broadcast build inside the write job runs one narrow agg over
+            # the cache — no batch re-scan, no separate gate job (has_dups
+            # came free with the lineage agg above). Winners persist only
+            # on the dup branch, where clean/dup split references the plan
+            # twice.
+            strategy = "semijoin"
             winners = lww_dedup_semijoin(
                 batch,
                 cache_registry=_dedup_caches if has_dups else None,
@@ -1648,19 +1631,16 @@ class LakeTable:
                 tuples=tuples,
                 tuples_partition_disjoint=True,
             )
-        elif strategy == "salted":
-            winners = lww_dedup_salted(batch, n_salts=n_salts)
         else:
+            # Beyond the byte budget the broadcast (driver collect + per-
+            # executor fetch) anti-scales with cluster size — the shuffling
+            # window path wins.
+            strategy = "window"
             winners = lww_dedup(batch)
         if "content_raw" in winners.columns and "content_sha256" not in winners.columns:
-            if _conf(self.spark, "kmw.merge.fingerprintWinners", "true") == "true":
-                from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
+            from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
 
-                winners = fingerprint_content(winners)
-            else:  # keep raw content; sha256 column left null (bench/diagnostics)
-                winners = winners.withColumnRenamed("content_raw", "content").withColumn(
-                    "content_sha256", F.lit(None).cast("string")
-                )
+            winners = fingerprint_content(winners)
 
         # -- schema evolution: reconcile batch payload columns vs manifest --
         internal_names = {n for n, _ in INTERNAL_FIELDS} | {"op", "lineage"}
@@ -1769,20 +1749,18 @@ class LakeTable:
         # n_buckets — more writers than buckets is just empty tasks),
         # not a hard 32: r2's fixed cap throttled every merge's write
         # stage to 32 tasks on any larger cluster (VERDICT r2 §wrong 3).
-        # Override with kmw.mor.maxWriters.
         n_writers = self._writer_count()
-        to_write = winners.observe(obs, F.count(F.lit(1)).alias("rows")).repartition(
-            n_writers, "_bucket"
+        # Key-sorted delta files: the dynamic-partition write already sorts
+        # each task by _bucket; widening that same sort to (_bucket, repo,
+        # path) is two extra string comparators — FileFormatWriter sees its
+        # required ordering satisfied and plans NO second sort — and buys
+        # tight per-file key bounds (footer stats → lookup pruning) plus
+        # better RLE/dict compression on the key columns.
+        to_write = (
+            winners.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .repartition(n_writers, "_bucket")
+            .sortWithinPartitions("_bucket", *KEY_COLS)
         )
-        if _conf(self.spark, "kmw.write.sortByKey", "true") == "true":
-            # Key-sorted delta files: the dynamic-partition write already
-            # sorts each task by _bucket; widening that same sort to
-            # (_bucket, repo, path) is two extra string comparators —
-            # FileFormatWriter sees its required ordering satisfied and
-            # plans NO second sort — and buys tight per-file key bounds
-            # (footer stats → lookup pruning) plus better RLE/dict
-            # compression on the key columns.
-            to_write = to_write.sortWithinPartitions("_bucket", *KEY_COLS)
         self._write(to_write).mode("overwrite").partitionBy("_bucket").parquet(out_dir)
         # NB: Observation metrics can over-count on stage retries /
         # speculative re-execution; merged_rows is reporting-only (never
@@ -1846,7 +1824,6 @@ class LakeTable:
         # bounded read amplification: fold any bucket whose delta
         # chain grew past the cap back into its base (bucket-local
         # rewrite — never the whole table)
-        max_deltas = int(_conf(self.spark, "kmw.mor.maxDeltasPerBucket", "8"))
         # _entry_count, NOT len(): once a delta list is externalized to a
         # sidecar ref {"ref","n"} its len() is 2 — comparing that against
         # the cap would silently disable auto-compaction for exactly the
@@ -1854,7 +1831,7 @@ class LakeTable:
         over = [
             int(b)
             for b, fs in new_deltas.items()
-            if self._entry_count(fs) > max_deltas
+            if self._entry_count(fs) > MAX_DELTAS_PER_BUCKET
         ]
         if over:
             self.compact_buckets(over)

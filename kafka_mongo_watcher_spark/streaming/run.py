@@ -96,16 +96,6 @@ def run_replay_stream(
         stats.append(s)
 
     events = stream_event_log(spark, log_dir, max_files_per_trigger=max_files_per_trigger)
-    if suppress_stale and "patch_mask" in events.columns:
-        # The suppressor's per-key ROW watermark is unsound for partial
-        # updates: an out-of-order patch writing a column no later event
-        # touched must still apply (per-COLUMN LWW, operators/patch.py),
-        # but the row watermark would drop it.
-        raise ValueError(
-            "suppress_stale=True cannot be combined with a patch_mask event "
-            "log: row-level suppression would drop stale patches whose "
-            "columns still win per-column LWW"
-        )
     if suppress_stale:
         from kafka_mongo_watcher_spark.streaming.stateful import (
             suppress_stale as _suppress,

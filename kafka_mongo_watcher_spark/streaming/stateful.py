@@ -16,6 +16,12 @@ Correctness argument: a suppressed row's (commit_seq, offset) is ≤ a row
 forwarded in an EARLIER epoch, and epochs commit in order, so by LWW the
 suppressed row can never change final table state (tested: final snapshot
 is identical with and without suppression, including replayed epochs).
+Partial-update PATCH rows (op 'update' with a non-null `patch_mask`,
+operators/patch.py) pass through untouched and never advance the
+watermark: an out-of-order patch may write a column no later event
+touches, so it can still win per-column LWW. Only full rows advance the
+watermark, and a suppressed full row is older than a full row already
+forwarded — which writes every column — so it wins no column either.
 Spark versions the state store per epoch — a replayed epoch re-reads the
 previous epoch's state — so a crash between suppressor and sink cannot
 suppress an event that was never forwarded.
@@ -54,6 +60,7 @@ _STATE_SCHEMA = "max_seq BIGINT, max_off BIGINT"
 def _suppress_fn(out_cols: list[str], key_cols):
     """Build the per-group state function. `out_cols` pins the output column
     order to the declared schema (pandas frames must match it exactly)."""
+    has_mask = "patch_mask" in out_cols
 
     def fn(
         key,  # noqa: ARG001 — (repo, path), unused: state is per-group already
@@ -74,6 +81,11 @@ def _suppress_fn(out_cols: list[str], key_cols):
             valid = pdf["commit_seq"].notna() & pdf["offset"].notna()
             for kc in key_cols:
                 valid &= pdf[kc].notna()
+            # full = rows the watermark gates; patch rows bypass it like
+            # malformed ones
+            full = valid
+            if has_mask:
+                full = valid & ~((pdf["op"] == "update") & pdf["patch_mask"].notna())
             if gate_seq is None:
                 keep = pdf
             else:
@@ -83,9 +95,10 @@ def _suppress_fn(out_cols: list[str], key_cols):
                 beats = (pdf["commit_seq"] > gate_seq) | (
                     (pdf["commit_seq"] == gate_seq) & (pdf["offset"] > gate_off)
                 )
-                # malformed rows always pass through (DLQ owns them)
-                keep = pdf[beats | ~valid]
-            v = pdf[valid]
+                # malformed rows (the DLQ owns them) and patch rows
+                # always pass through
+                keep = pdf[beats | ~full]
+            v = pdf[full]
             if len(v):
                 top_seq = int(v["commit_seq"].max())
                 top_off = int(v.loc[v["commit_seq"] == top_seq, "offset"].max())

@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from kafka_mongo_watcher_spark.plans import lake
 from kafka_mongo_watcher_spark.plans.lake import LakeTable
 
 BATCH_COLS = (
@@ -60,6 +61,19 @@ def legacy_cow_table(spark, path):
         with open(mpath, "w") as f:
             json.dump(m, f)
     return LakeTable(spark, path)
+
+
+def restamp_head(spark, t, edit):
+    """The table as an older engine left its head: `edit(manifest)`
+    rewrites the committed head manifest in place (stats sections must be
+    inline, i.e. at most INLINE_MAX_FILES_PER_BUCKET files per bucket)."""
+    mpath = os.path.join(t.path, "_manifests", f"v{t.version:08d}.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    edit(m)
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    return LakeTable(spark, t.path)
 
 
 def test_mor_equals_compacted_across_batch_sequence(spark, tmp_path):
@@ -145,19 +159,16 @@ def test_mor_write_amplification_is_o_batch(spark, tmp_path):
     assert t.version == v_before + 1
 
 
-def test_mor_auto_compaction_bounds_delta_chain(spark, tmp_path):
-    spark.conf.set("kmw.mor.maxDeltasPerBucket", "3")
-    try:
-        t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2, write_mode="mor")
-        for i in range(8):
-            t.merge(
-                _batch(spark, [_row("update", "r", "p", i + 1, f"v{i + 1}")]),
-                source_id="s", batch_id=i,
-            )
-        assert all(len(fs) <= 3 for fs in t.manifest["deltas"].values())
-        assert _state(t) == {("r", "p"): ("commit8", "v8", 8)}
-    finally:
-        spark.conf.unset("kmw.mor.maxDeltasPerBucket")
+def test_mor_auto_compaction_bounds_delta_chain(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(lake, "MAX_DELTAS_PER_BUCKET", 3)
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2, write_mode="mor")
+    for i in range(8):
+        t.merge(
+            _batch(spark, [_row("update", "r", "p", i + 1, f"v{i + 1}")]),
+            source_id="s", batch_id=i,
+        )
+    assert all(len(fs) <= 3 for fs in t.manifest["deltas"].values())
+    assert _state(t) == {("r", "p"): ("commit8", "v8", 8)}
 
 
 def test_mor_schema_evolution_and_lookup(spark, tmp_path):
@@ -237,86 +248,74 @@ def test_mor_duplicate_delivery_within_batch(spark, tmp_path):
 
 def test_writer_count_scales_with_parallelism_and_conf(spark, tmp_path):
     """VERDICT r2 §wrong 3: the MOR write stage was hard-capped at 32 tasks.
-    Now: min(buckets, max(32, defaultParallelism)), conf-overridable."""
+    Now: min(buckets, max(32, defaultParallelism))."""
     t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=256, write_mode="mor")
     par = spark.sparkContext.defaultParallelism
     assert t._writer_count() == min(256, max(32, par))
     # never more tasks than buckets
     assert LakeTable.create(spark, str(tmp_path / "t3"), n_buckets=3)._writer_count() == 3
-    spark.conf.set("kmw.mor.maxWriters", "64")
-    try:
-        assert t._writer_count() == 64
-    finally:
-        spark.conf.unset("kmw.mor.maxWriters")
 
 
-def test_manifest_sidecars_keep_main_manifest_o_buckets(spark, tmp_path):
+def test_manifest_sidecars_keep_main_manifest_o_buckets(spark, tmp_path, monkeypatch):
     """VERDICT r2 §next 9: per-bucket file lists spill to immutable sidecar
     blobs; the main manifest holds {ref, n} pointers, unchanged buckets
     carry their pointer forward (zero IO), and reads resolve lazily."""
     import json
 
-    spark.conf.set("kmw.manifest.inlineMaxFilesPerBucket", "0")
-    try:
-        t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4, write_mode="mor")
-        t.merge(_batch(spark, [_row("insert", "r", f"p{i}", 1) for i in range(50)]),
-                source_id="s", batch_id=0)
-        assert all(
-            isinstance(e, dict) and set(e) == {"ref", "n"}
-            for e in t.manifest["deltas"].values()
-        )
-        # the manifest JSON on disk carries NO .parquet paths, only refs
-        with open(os.path.join(t.path, "_manifests", f"v{t.version:08d}.json")) as f:
-            raw = json.load(f)
-        assert ".parquet" not in json.dumps(raw["deltas"]) + json.dumps(raw["buckets"])
+    monkeypatch.setattr(lake, "INLINE_MAX_FILES_PER_BUCKET", 0)
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4, write_mode="mor")
+    t.merge(_batch(spark, [_row("insert", "r", f"p{i}", 1) for i in range(50)]),
+            source_id="s", batch_id=0)
+    assert all(
+        isinstance(e, dict) and set(e) == {"ref", "n"}
+        for e in t.manifest["deltas"].values()
+    )
+    # the manifest JSON on disk carries NO .parquet paths, only refs
+    with open(os.path.join(t.path, "_manifests", f"v{t.version:08d}.json")) as f:
+        raw = json.load(f)
+    assert ".parquet" not in json.dumps(raw["deltas"]) + json.dumps(raw["buckets"])
 
-        refs_before = {b: e["ref"] for b, e in t.manifest["deltas"].items()}
-        # second merge touching ONE key: untouched buckets keep the same ref
-        t.merge(_batch(spark, [_row("update", "r", "p0", 2, "v2")]),
-                source_id="s", batch_id=1)
-        touched_b = str(t.bucket_of("r", "p0"))
-        for b, e in t.manifest["deltas"].items():
-            if b == touched_b:
-                assert e["ref"] != refs_before[b]
-            else:
-                assert e["ref"] == refs_before[b]
+    refs_before = {b: e["ref"] for b, e in t.manifest["deltas"].items()}
+    # second merge touching ONE key: untouched buckets keep the same ref
+    t.merge(_batch(spark, [_row("update", "r", "p0", 2, "v2")]),
+            source_id="s", batch_id=1)
+    touched_b = str(t.bucket_of("r", "p0"))
+    for b, e in t.manifest["deltas"].items():
+        if b == touched_b:
+            assert e["ref"] != refs_before[b]
+        else:
+            assert e["ref"] == refs_before[b]
 
-        # reads resolve through sidecars; fresh loader too
-        assert len(_state(t)) == 50
-        assert _state(t)[("r", "p0")] == ("commit2", "v2", 2)
-        assert _state(LakeTable(spark, t.path)) == _state(t)
+    # reads resolve through sidecars; fresh loader too
+    assert len(_state(t)) == 50
+    assert _state(t)[("r", "p0")] == ("commit2", "v2", 2)
+    assert _state(LakeTable(spark, t.path)) == _state(t)
 
-        # compaction folds chains and externalizes the new base lists
-        t.compact()
-        assert not t.manifest["deltas"]
-        assert len(_state(t)) == 50
-    finally:
-        spark.conf.unset("kmw.manifest.inlineMaxFilesPerBucket")
+    # compaction folds chains and externalizes the new base lists
+    t.compact()
+    assert not t.manifest["deltas"]
+    assert len(_state(t)) == 50
 
 
-def test_auto_compaction_fires_across_sidecar_externalization(spark, tmp_path):
+def test_auto_compaction_fires_across_sidecar_externalization(spark, tmp_path, monkeypatch):
     """Regression: the auto-compact gate must count delta files via
     _entry_count, not len() — an externalized delta entry is a {"ref","n"}
     dict whose len() is always 2, which silently disabled auto-compaction
     for exactly the buckets whose chains grew past the inline cap."""
-    spark.conf.set("kmw.manifest.inlineMaxFilesPerBucket", "0")
-    spark.conf.set("kmw.mor.maxDeltasPerBucket", "3")
-    try:
-        t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2, write_mode="mor")
-        for i in range(8):
-            t.merge(
-                _batch(spark, [_row("update", "r", "p", i + 1, f"v{i + 1}")]),
-                source_id="s", batch_id=i,
-            )
-            # every delta entry is externalized (inline cap 0), yet chains
-            # must still fold once they exceed maxDeltasPerBucket
-            assert all(
-                t._entry_count(e) <= 3 for e in t.manifest["deltas"].values()
-            ), t.manifest["deltas"]
-        assert _state(t) == {("r", "p"): ("commit8", "v8", 8)}
-    finally:
-        spark.conf.unset("kmw.manifest.inlineMaxFilesPerBucket")
-        spark.conf.unset("kmw.mor.maxDeltasPerBucket")
+    monkeypatch.setattr(lake, "INLINE_MAX_FILES_PER_BUCKET", 0)
+    monkeypatch.setattr(lake, "MAX_DELTAS_PER_BUCKET", 3)
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2, write_mode="mor")
+    for i in range(8):
+        t.merge(
+            _batch(spark, [_row("update", "r", "p", i + 1, f"v{i + 1}")]),
+            source_id="s", batch_id=i,
+        )
+        # every delta entry is externalized (inline cap 0), yet chains
+        # must still fold once they exceed maxDeltasPerBucket
+        assert all(
+            t._entry_count(e) <= 3 for e in t.manifest["deltas"].values()
+        ), t.manifest["deltas"]
+    assert _state(t) == {("r", "p"): ("commit8", "v8", 8)}
 
 
 def test_compaction_plan_is_single_shuffle(spark, tmp_path):
@@ -339,7 +338,7 @@ def test_compaction_plan_is_single_shuffle(spark, tmp_path):
     assert _state(t) == before
 
 
-def test_auto_strategy_routes_by_winner_ratio(spark, tmp_path):
+def test_auto_strategy_routes_by_winner_ratio(spark, tmp_path, monkeypatch):
     """The auto dedup policy is profitability-aware (r3 A/B, lake.py): a
     large batch whose winner set is most of the batch (dedup removes little
     → the semijoin broadcast costs more than the loser shuffle it saves)
@@ -351,25 +350,22 @@ def test_auto_strategy_routes_by_winner_ratio(spark, tmp_path):
     from kafka_mongo_watcher_spark.operators.envelope import transform_events
 
     t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8, write_mode="mor")
-    spark.conf.set("kmw.dedup.ratioMinEvents", "1000")
-    try:
-        # ~3.4 events/key in the generator -> ratio ~0.5-0.7 at this size
-        high_card = transform_events(generate_events(spark, 4000), fingerprint=False)
-        s1 = t.merge(high_card, source_id="s", batch_id=0)
-        assert s1["dedup_strategy"] == "salted"
-        # same events collapsed onto 40 keys -> ratio ~0.01
-        heavy_dup = (
-            transform_events(generate_events(spark, 4000), fingerprint=False)
-            .withColumn("repo", F.concat(F.lit("r"), (F.col("offset") % 5).cast("string")))
-            .withColumn("path", F.concat(F.lit("p"), (F.col("offset") % 8).cast("string")))
-            # keep the keyed-delivery contract the ratio estimator documents:
-            # partition follows the (rewritten) key
-            .withColumn("partition_id", F.pmod(F.xxhash64("repo", "path"), F.lit(8)).cast("int"))
-        )
-        s2 = t.merge(heavy_dup, source_id="s", batch_id=1)
-        assert s2["dedup_strategy"] == "semijoin"
-    finally:
-        spark.conf.unset("kmw.dedup.ratioMinEvents")
+    monkeypatch.setattr(lake, "RATIO_MIN_EVENTS", 1000)
+    # ~3.4 events/key in the generator -> ratio ~0.5-0.7 at this size
+    high_card = transform_events(generate_events(spark, 4000), fingerprint=False)
+    s1 = t.merge(high_card, source_id="s", batch_id=0)
+    assert s1["dedup_strategy"] == "salted"
+    # same events collapsed onto 40 keys -> ratio ~0.01
+    heavy_dup = (
+        transform_events(generate_events(spark, 4000), fingerprint=False)
+        .withColumn("repo", F.concat(F.lit("r"), (F.col("offset") % 5).cast("string")))
+        .withColumn("path", F.concat(F.lit("p"), (F.col("offset") % 8).cast("string")))
+        # keep the keyed-delivery contract the ratio estimator documents:
+        # partition follows the (rewritten) key
+        .withColumn("partition_id", F.pmod(F.xxhash64("repo", "path"), F.lit(8)).cast("int"))
+    )
+    s2 = t.merge(heavy_dup, source_id="s", batch_id=1)
+    assert s2["dedup_strategy"] == "semijoin"
     # tiny batch below the floor: semijoin even with no duplication
     s3 = t.merge(
         _batch(spark, [_row("insert", "r", f"q{i}", 10 + i) for i in range(5)]),

@@ -5,6 +5,8 @@ inherit from table state; a masked NULL is removedFields (explicit unset).
 Reference behavior: the watcher forwards updateDescription deltas unless
 ignoreUpdateDescription (/root/reference/internal/mongo/event.go)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -175,53 +177,59 @@ EVENT_DDL = (
 )
 
 
-def test_streaming_patch_log_applies_deltas(spark, tmp_path):
-    """The streaming source autodetects the optional patch_mask column from
-    a parquet footer (sources/events.py); patches fold through the merge's
-    partial-update path across epochs."""
-    log = tmp_path / "log"
-    spark.createDataFrame(
-        [(0, 1, "insert", "r", "p", "c1", "py", "body1", 1, None),
-         (0, 2, "insert", "r", "q", "c2", "go", "body2", 2, None)],
-        EVENT_DDL,
-    ).coalesce(1).write.parquet(str(log / "chunk=0"))
-    spark.createDataFrame(
-        [(0, 3, "update", "r", "p", None, "rs", None, 3, ["lang"])],
-        EVENT_DDL,
-    ).coalesce(1).write.parquet(str(log / "chunk=1"))
-
-    LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+def _replay(spark, tmp_path, name, **kw):
+    LakeTable.create(spark, str(tmp_path / name), n_buckets=4)
     stats = run_replay_stream(
         spark,
-        log_dir=str(log),
-        table_path=str(tmp_path / "t"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
+        log_dir=str(tmp_path / f"log_{name}"),
+        table_path=str(tmp_path / name),
+        checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+        **kw,
     )
-    assert len([s for s in stats if not s.get("skipped")]) == 2
-    t = LakeTable(spark, str(tmp_path / "t"))
-    got = {r["path"]: (r["lang"], r["content"], r["commit_seq"])
-           for r in t.snapshot().collect()}
-    # p: lang patched, content inherited from the insert (canonicalized with
-    # the trailing newline the fingerprint pass appends); q untouched
-    assert got == {"p": ("rs", "body1\n", 3), "q": ("go", "body2\n", 2)}
+    return stats, LakeTable(spark, str(tmp_path / name))
 
 
-def test_streaming_patch_log_rejects_suppressor(spark, tmp_path):
-    log = tmp_path / "log"
-    spark.createDataFrame(
-        [(0, 1, "update", "r", "p", None, "rs", None, 1, ["lang"])],
-        EVENT_DDL,
-    ).write.parquet(str(log / "chunk=0"))
-    LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
-    with pytest.raises(ValueError, match="suppress_stale"):
-        run_replay_stream(
-            spark,
-            log_dir=str(log),
-            table_path=str(tmp_path / "t"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            suppress_stale=True,
+def test_streaming_patch_log_applies_deltas(spark, tmp_path):
+    """The streaming source always declares the optional patch_mask column
+    (sources/events.py); each batch's own rows choose the merge route, and
+    patches fold through the partial-update path across epochs — whether
+    or not the early chunks physically carry the column."""
+    early = [(0, 1, "insert", "r", "p", "c1", "py", "body1", 1, None),
+             (0, 2, "insert", "r", "q", "c2", "go", "body2", 2, None)]
+    patch = [(0, 3, "update", "r", "p", None, "rs", None, 3, ["lang"])]
+    for name, early_has_mask in (("masked", True), ("late_mask", False)):
+        log = tmp_path / f"log_{name}"
+        df = spark.createDataFrame(early, EVENT_DDL)
+        if not early_has_mask:  # written before the log had the column
+            df = df.drop("patch_mask")
+        df.coalesce(1).write.parquet(str(log / "chunk=0"))
+        spark.createDataFrame(patch, EVENT_DDL).coalesce(1).write.parquet(
+            str(log / "chunk=1")
         )
+        stats, t = _replay(spark, tmp_path, name)
+        assert [s["dedup_strategy"] for s in stats if not s.get("skipped")] == [
+            "semijoin", "patch_append"
+        ], name
+        got = {r["path"]: (r["lang"], r["content"], r["commit_seq"])
+               for r in t.snapshot().collect()}
+        # p: lang patched, content inherited from the insert (canonicalized
+        # with the trailing newline the fingerprint pass appends); q untouched
+        assert got == {"p": ("rs", "body1\n", 3), "q": ("go", "body2\n", 2)}, name
+
+    # a plain log of more files than any footer probe would read: 130 files
+    # of 3 events each, one epoch
+    from kafka_mongo_watcher_spark.datagen import generate_events
+    from kafka_mongo_watcher_spark.oracle import oracle_rows
+
+    ev = generate_events(spark, 390, malformed_per_mille=0)
+    rows = [r.asDict() for r in ev.collect()]
+    log = tmp_path / "log_wide"
+    ev.repartition(130).write.parquet(str(log))
+    assert len([f for f in os.listdir(log) if f.endswith(".parquet")]) == 130
+    stats, t = _replay(spark, tmp_path, "wide", max_files_per_trigger=200)
+    assert [s["dedup_strategy"] for s in stats] == ["semijoin"]
+    cols = ["repo", "path", "commit", "lang", "content_sha256"]
+    assert {tuple(r) for r in t.snapshot().select(*cols).collect()} == oracle_rows(rows)
 
 
 def test_patch_fold_plan_shape(spark):

@@ -1,10 +1,5 @@
 """Round-4 regression tests for the ADVICE r3 items:
 
-- `_conf` precedence: a runtime `kmw.X` set must beat a submit-time
-  `spark.kmw.X` alias (plans/lake.py::_conf).
-- `_log_has_patch_mask` checks EVERY footer and raises on mixed presence
-  (sources/events.py) — a later chunk adding patch_mask must not silently
-  stream schemaless and null-corrupt untouched columns.
 - `$merge whenMatched='merge'` masks the LOGICAL column name: a batch
   carrying pre-fingerprint `content_raw` must overlay `content`
   (operators/pipeline.py::_stage_merge).
@@ -15,67 +10,10 @@
 
 import os
 
-import pytest
-
-from kafka_mongo_watcher_spark.plans.lake import LakeTable, _conf
-from kafka_mongo_watcher_spark.sources.events import _log_has_patch_mask
+from kafka_mongo_watcher_spark.plans import lake
+from kafka_mongo_watcher_spark.plans.lake import LakeTable
 
 from tests.test_lake_mor import _batch, _row, _state
-
-
-# ---------- _conf precedence -------------------------------------------------
-
-
-def test_conf_runtime_set_beats_submit_alias(spark):
-    key = "kmw.test.r4conf"
-    try:
-        spark.conf.set(f"spark.{key}", "submit")
-        assert _conf(spark, key, "default") == "submit"
-        spark.conf.set(key, "runtime")
-        assert _conf(spark, key, "default") == "runtime"
-    finally:
-        spark.conf.unset(f"spark.{key}")
-        spark.conf.unset(key)
-    assert _conf(spark, key, "default") == "default"
-
-
-# ---------- patch_mask footer probe -------------------------------------------
-
-
-def _write_chunk(spark, path, with_mask):
-    df = spark.createDataFrame(
-        [(0, 1, "insert", "r", "p", "c1", "py", "body", 1)],
-        "partition_id int, commit_seq bigint, op string, repo string, "
-        "path string, commit string, lang string, content_raw string, "
-        "offset bigint",
-    )
-    if with_mask:
-        from pyspark.sql import functions as F
-
-        df = df.withColumn(
-            "patch_mask", F.array(F.lit("content")).cast("array<string>")
-        )
-    df.coalesce(1).write.mode("append").parquet(path)
-
-
-def test_patch_mask_probe_checks_every_footer(spark, tmp_path):
-    homog = str(tmp_path / "homog")
-    _write_chunk(spark, homog, with_mask=False)
-    _write_chunk(spark, homog, with_mask=False)
-    assert _log_has_patch_mask(homog) is False
-
-    masked = str(tmp_path / "masked")
-    _write_chunk(spark, masked, with_mask=True)
-    _write_chunk(spark, masked, with_mask=True)
-    assert _log_has_patch_mask(masked) is True
-
-    mixed = str(tmp_path / "mixed")
-    _write_chunk(spark, mixed, with_mask=False)
-    _write_chunk(spark, mixed, with_mask=True)
-    with pytest.raises(ValueError, match="patch_mask"):
-        _log_has_patch_mask(mixed)
-
-    assert _log_has_patch_mask(str(tmp_path / "empty")) is False
 
 
 # ---------- $merge masks logical column names ---------------------------------
@@ -112,43 +50,40 @@ def test_merge_stage_content_raw_masks_content(spark, tmp_path):
 # ---------- branch blob namespace token ----------------------------------------
 
 
-def test_refork_after_drop_never_overwrites_blobs(spark, tmp_path):
+def test_refork_after_drop_never_overwrites_blobs(spark, tmp_path, monkeypatch):
     """Drop an unpublished branch, re-fork the same name at the same base:
     the new fork must mint NEW blob refs — the orphaned fork's blob files
     are immutable and may be cached by ref name in sibling handles."""
-    key = "kmw.manifest.inlineMaxFilesPerBucket"
-    spark.conf.set(key, "0")  # externalize every bucket entry
-    try:
-        t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2,
-                             write_mode="mor")
-        t.merge(_batch(spark, [_row("insert", "r", "p", 1)]),
-                source_id="s", batch_id=0)
+    # externalize every bucket entry
+    monkeypatch.setattr(lake, "INLINE_MAX_FILES_PER_BUCKET", 0)
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2,
+                         write_mode="mor")
+    t.merge(_batch(spark, [_row("insert", "r", "p", 1)]),
+            source_id="s", batch_id=0)
 
-        b1 = t.branch("audit")
-        b1.merge(_batch(spark, [_row("update", "r", "p", 5, "v5")]),
-                 source_id="s", batch_id=1)
-        blob_dir = os.path.join(str(tmp_path / "t"), "_manifests", "blobs")
-        branch_blobs1 = {
-            f: open(os.path.join(blob_dir, f)).read()
-            for f in os.listdir(blob_dir) if f.startswith("b-audit")
-        }
-        assert branch_blobs1, "fixture must externalize branch blobs"
+    b1 = t.branch("audit")
+    b1.merge(_batch(spark, [_row("update", "r", "p", 5, "v5")]),
+             source_id="s", batch_id=1)
+    blob_dir = os.path.join(str(tmp_path / "t"), "_manifests", "blobs")
+    branch_blobs1 = {
+        f: open(os.path.join(blob_dir, f)).read()
+        for f in os.listdir(blob_dir) if f.startswith("b-audit")
+    }
+    assert branch_blobs1, "fixture must externalize branch blobs"
 
-        t.drop_branch("audit")
-        b2 = t.branch("audit")  # same name, same base
-        b2.merge(_batch(spark, [_row("update", "r", "p", 9, "v9")]),
-                 source_id="s", batch_id=1)
+    t.drop_branch("audit")
+    b2 = t.branch("audit")  # same name, same base
+    b2.merge(_batch(spark, [_row("update", "r", "p", 9, "v9")]),
+             source_id="s", batch_id=1)
 
-        # orphaned fork's blobs byte-identical; new fork minted disjoint refs
-        for f, body in branch_blobs1.items():
-            assert open(os.path.join(blob_dir, f)).read() == body
-        branch_blobs2 = {f for f in os.listdir(blob_dir)
-                         if f.startswith("b-audit")} - set(branch_blobs1)
-        assert branch_blobs2, "re-fork must mint new blob refs"
-        assert _state(b2)[("r", "p")] == ("commit9", "v9", 9)
+    # orphaned fork's blobs byte-identical; new fork minted disjoint refs
+    for f, body in branch_blobs1.items():
+        assert open(os.path.join(blob_dir, f)).read() == body
+    branch_blobs2 = {f for f in os.listdir(blob_dir)
+                     if f.startswith("b-audit")} - set(branch_blobs1)
+    assert branch_blobs2, "re-fork must mint new blob refs"
+    assert _state(b2)[("r", "p")] == ("commit9", "v9", 9)
 
-        # publish keeps working and main resolves the tokened refs
-        t.publish("audit")
-        assert _state(t)[("r", "p")] == ("commit9", "v9", 9)
-    finally:
-        spark.conf.unset(key)
+    # publish keeps working and main resolves the tokened refs
+    t.publish("audit")
+    assert _state(t)[("r", "p")] == ("commit9", "v9", 9)

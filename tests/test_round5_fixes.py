@@ -13,8 +13,6 @@
    downstream copy would diverge forever.
 4. (low) `_cdc_stream_changes` ignored `awaitTermination(300)`'s boolean
    and read a partially-written sink on timeout.
-5. (minor) `_log_has_patch_mask` read EVERY parquet footer driver-side;
-   now capped first+last K with a sound refuse-to-guess fallback.
 """
 
 import os
@@ -26,6 +24,8 @@ from kafka_mongo_watcher_spark.plans.lake import (
     LakeTable,
     _footer_column_stats,
 )
+
+from tests.test_lake_mor import restamp_head
 
 # ---------------------------------------------------------------------------
 # 1. array-typed user column must never be pruned as "absent → all-NULL"
@@ -79,14 +79,25 @@ def test_scan_array_column_is_not_null_not_pruned(spark, tmp_path):
         spark.createDataFrame(_array_rows(8), ARRAY_BATCH_COLS),
         source_id="s", batch_id=0,
     )
-    got = {r["path"] for r in t.scan([("tags", "is_not_null", None)]).collect()}
     want = {
         r["path"] for r in t.snapshot().filter(F.col("tags").isNotNull()).collect()
     }
-    assert got == want and len(want) == 4  # pre-fix: got == set()
-    # and the dual: is_null must not prune the null-tag rows either
-    got_null = {r["path"] for r in t.scan([("tags", "is_null", None)]).collect()}
-    assert got_null == {f"f{i}.py" for i in range(8)} - want
+    assert len(want) == 4
+    # second input: the manifest as the pre-fix engine wrote it, with no
+    # colstats entry at all for the array column
+    for table in (t, restamp_head(spark, t, _drop_tags_colstats)):
+        got = {r["path"] for r in table.scan([("tags", "is_not_null", None)]).collect()}
+        assert got == want  # pre-fix: got == set()
+        # and the dual: is_null must not prune the null-tag rows either
+        got_null = {r["path"] for r in table.scan([("tags", "is_null", None)]).collect()}
+        assert got_null == {f"f{i}.py" for i in range(8)} - want
+
+
+def _drop_tags_colstats(m):
+    for entry in m["file_stats"].values():
+        for s in entry.values():
+            assert s[6]["tags"] is None  # explicit None from the fixed writer
+            del s[6]["tags"]
 
 
 # ---------------------------------------------------------------------------
@@ -188,51 +199,3 @@ def test_lake_changes_reader_still_skips_compact(spark, tmp_path):
     )
     parts = reader.partitions({"version": 0}, {"version": t.version})
     assert {p.version for p in parts} == {1}  # merge yes, compact skipped
-
-
-# ---------------------------------------------------------------------------
-# 5. patch_mask probe cap: sound directionality
-# ---------------------------------------------------------------------------
-
-def _write_chunk(tmp_path, name, with_mask):
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = {"event_id": [1], "op": ["insert"]}
-    if with_mask:
-        d["patch_mask"] = [["content"]]
-    pq.write_table(pa.Table.from_pandas(pd.DataFrame(d)),
-                   str(tmp_path / name))
-
-
-def test_patch_mask_probe_capped(tmp_path, monkeypatch):
-    from kafka_mongo_watcher_spark.sources import events
-
-    monkeypatch.setattr(events, "_PATCH_MASK_PROBE_CAP", 4)
-    # 6 files, none masked: probe sees first 2 + last 2 only → cannot prove
-    # the unprobed middle is unmasked → must refuse, never guess False
-    for i in range(6):
-        _write_chunk(tmp_path, f"c{i}.parquet", with_mask=False)
-    with pytest.raises(ValueError, match="with_patch_mask explicitly"):
-        events._log_has_patch_mask(str(tmp_path))
-    # any probed file masked → True is sound (unprobed unmasked files
-    # null-fill; NULL mask = full row)
-    _write_chunk(tmp_path, "c0.parquet", with_mask=True)
-    # now mixed WITHIN the probe window → still raises (mixed semantics)
-    with pytest.raises(ValueError, match="mixes chunks"):
-        events._log_has_patch_mask(str(tmp_path))
-    for i in range(1, 6):
-        _write_chunk(tmp_path, f"c{i}.parquet", with_mask=True)
-    assert events._log_has_patch_mask(str(tmp_path)) is True
-
-
-def test_patch_mask_probe_exhaustive_below_cap(tmp_path):
-    from kafka_mongo_watcher_spark.sources import events
-
-    for i in range(3):
-        _write_chunk(tmp_path, f"c{i}.parquet", with_mask=False)
-    assert events._log_has_patch_mask(str(tmp_path)) is False
-    _write_chunk(tmp_path, "c1.parquet", with_mask=True)
-    with pytest.raises(ValueError, match="mixes chunks"):
-        events._log_has_patch_mask(str(tmp_path))

@@ -27,6 +27,7 @@ from kafka_mongo_watcher_spark.plans.lake import (
     _trunc_upper,
 )
 
+from tests.test_lake_mor import restamp_head
 from tests.test_patch import SCHEMA, USER_SCHEMA, _b, _full, _patch
 
 
@@ -92,7 +93,9 @@ def test_range_refutes_matrix():
 
 
 def test_stats_refute_column_shapes():
-    sr = LakeTable._stats_refute
+    def sr(stats, col, op, val):
+        return LakeTable._stats_refute(stats, col, op, val, "string")
+
     base = ["r1", "r9", "a.py", "z.py", 100]
     with_cols = base + [None, {"lang": ["go", "py", 0], "commit_seq": [5, 9, 0]}]
     assert sr(with_cols, "lang", "=", "rust")
@@ -101,6 +104,10 @@ def test_stats_refute_column_shapes():
     # column absent from a present colstats dict = pre-evolution file → all
     # NULL → refutes any null-rejecting op
     assert sr(with_cols, "content", "=", "anything")
+    # ...but only for a flat primitive, non-`_` column: manifests written
+    # before the round-5 stats fix omitted every other column
+    assert not LakeTable._stats_refute(with_cols, "tags", "=", "x", "array<string>")
+    assert not LakeTable._stats_refute(with_cols, "_x", "is_not_null", None, "string")
     # unusable column entry is inconclusive
     assert not sr(base + [None, {"lang": None}], "lang", "=", "x")
     # provably all-null column refutes
@@ -278,13 +285,11 @@ def test_scan_masked_patch_buckets_resolve_before_filter(spark, tmp_path):
 
 
 def test_scan_with_stats_disabled_is_full_read(spark, tmp_path):
-    spark.conf.set("kmw.stats.collect", "false")
-    try:
-        t = _mk(spark, tmp_path)
-        t.merge(_b(spark, [_row("insert", f"o/r{i}", "f.py", i) for i in range(10)]),
-                source_id="s", batch_id=0)
-    finally:
-        spark.conf.unset("kmw.stats.collect")
+    t = _mk(spark, tmp_path)
+    t.merge(_b(spark, [_row("insert", f"o/r{i}", "f.py", i) for i in range(10)]),
+            source_id="s", batch_id=0)
+    # committed without stats, as an older engine left it
+    t = restamp_head(spark, t, lambda m: m.update(file_stats={}))
     rep = _assert_scan_equals_filter(
         t, [("commit_seq", ">=", 9999)], F.col("commit_seq") >= 9999
     )
@@ -344,7 +349,7 @@ def test_clustered_compaction_tightens_column_bounds(spark, tmp_path):
         stats = t._stats_of(b)
         for f in t._entry_files("buckets", b):
             lo, hi, _ = stats[f][6]["lang"]
-            refuted = LakeTable._stats_refute(stats[f], "lang", "=", "go")
+            refuted = LakeTable._stats_refute(stats[f], "lang", "=", "go", "string")
             assert refuted == (not (lo <= "go" <= (hi if hi is not None else "\U0010ffff")))
     # point lookup across the clustered layout
     got = t.lookup("o/r7", "f7.py").collect()
@@ -432,7 +437,9 @@ def test_scan_null_tests(spark, tmp_path):
     want_nn = _rows_set(t.snapshot().filter(F.col("lang").isNotNull()), "path")
     assert got_nn == want_nn and len(got_nn) == 10
     # refutation matrix on synthetic entries
-    sr = LakeTable._stats_refute
+    def sr(stats, col, op, val):
+        return LakeTable._stats_refute(stats, col, op, val, "string")
+
     base = ["r", "r", "a", "z", 10]
     assert sr(base + [None, {"lang": ["go", "py", 0]}], "lang", "is_null", None)
     assert not sr(base + [None, {"lang": ["go", "py", 3]}], "lang", "is_null", None)
@@ -514,7 +521,9 @@ def test_refutation_soundness_property():
             arg = rand_val()
             if arg is None:
                 continue
-        refuted = LakeTable._stats_refute(stats, "c", op, arg)
+        refuted = LakeTable._stats_refute(
+            stats, "c", op, arg, "bigint" if kind == "int" else "string"
+        )
         if refuted:
             offenders = [v for v in values if sat(v, op, arg)]
             assert not offenders, (

@@ -26,7 +26,7 @@ def test_salted_merge_equals_unsalted_and_oracle(spark, tmp_path):
     t_plain = LakeTable.create(spark, str(tmp_path / "plain"), n_buckets=8)
     t_plain.merge(transform_events(ev), source_id="s", batch_id=0, salted=False)
     t_salt = LakeTable.create(spark, str(tmp_path / "salt"), n_buckets=8)
-    t_salt.merge(transform_events(ev), source_id="s", batch_id=0, salted=True, n_salts=8)
+    t_salt.merge(transform_events(ev), source_id="s", batch_id=0, salted=True)
 
     got_plain = {tuple(r) for r in t_plain.snapshot().select(*FINAL_COLS).collect()}
     got_salt = {tuple(r) for r in t_salt.snapshot().select(*FINAL_COLS).collect()}

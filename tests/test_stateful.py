@@ -10,6 +10,10 @@ import os
 from pyspark.sql import functions as F
 
 from kafka_mongo_watcher_spark.datagen import generate_events, write_event_log
+from kafka_mongo_watcher_spark.functions.content import (
+    normalize_content_py,
+    sha256_hex_py,
+)
 from kafka_mongo_watcher_spark.oracle import oracle_rows
 from kafka_mongo_watcher_spark.plans.lake import LakeTable
 from kafka_mongo_watcher_spark.sources.events import stream_event_log
@@ -84,9 +88,36 @@ def test_suppressor_drops_redelivered_and_stale_events(spark, tmp_path):
         assert (repo, path, seq, off) in forwarded
 
 
+PATCH_DDL = (
+    "partition_id int, commit_seq bigint, op string, repo string, path string, "
+    "commit string, lang string, content_raw string, offset bigint, "
+    "patch_mask array<string>"
+)
+
+
+def _patch_log(spark, log: str):
+    """One epoch per chunk: an insert, a patch writing lang, an OUT-OF-ORDER
+    patch (older than the lang patch) writing content — a column no later
+    event touches, so it still wins per-column LWW — and the insert
+    delivered again (stale: a full row at-or-below the watermark)."""
+    insert = [(0, 1, "insert", "r", "p", "c1", "py", "body1", 1, None),
+              (0, 2, "insert", "r", "q", "c2", "go", "body2", 2, None)]
+    chunks = [
+        insert,
+        [(0, 5, "update", "r", "p", None, "rs", None, 5, ["lang"])],
+        [(0, 3, "update", "r", "p", None, None, "late", 3, ["content"])],
+        insert,
+    ]
+    for i, rows in enumerate(chunks):
+        _write_chunk(spark.createDataFrame(rows, PATCH_DDL), log, f"chunk_{i:04d}")
+    sha = lambda raw: sha256_hex_py(normalize_content_py(raw))  # noqa: E731
+    return {("r", "p", "c1", "rs", sha("late")), ("r", "q", "c2", "go", sha("body2"))}
+
+
 def test_suppressed_replay_matches_plain_replay_and_oracle(spark, tmp_path):
     """Final table state with suppression == plain path == sequential oracle,
-    on a log whose later chunks re-deliver earlier events."""
+    on a log whose later chunks re-deliver earlier events, and on a patch
+    log (patch rows pass the suppressor untouched)."""
     ev = generate_events(spark, 2000).cache()
     rows = [r.asDict() for r in ev.collect()]
     log = str(tmp_path / "log")
@@ -97,14 +128,16 @@ def test_suppressed_replay_matches_plain_replay_and_oracle(spark, tmp_path):
     _write_chunk(
         ev.filter(F.col("commit_seq") < lo + step), log, "chunk_9999"
     )
+    patch_log = str(tmp_path / "patch_log")
+    patch_want = _patch_log(spark, patch_log)
 
-    def run(table_name: str, ckpt: str, **kw):
+    def run(log_dir: str, table_name: str, **kw):
         t = LakeTable.create(spark, str(tmp_path / table_name), n_buckets=8)
         run_replay_stream(
             spark,
-            log_dir=log,
+            log_dir=log_dir,
             table_path=str(tmp_path / table_name),
-            checkpoint_dir=str(tmp_path / ckpt),
+            checkpoint_dir=str(tmp_path / f"ckpt_{table_name}"),
             **kw,
         )
         return {
@@ -112,9 +145,11 @@ def test_suppressed_replay_matches_plain_replay_and_oracle(spark, tmp_path):
             for r in t.refresh().snapshot().select(*FINAL_COLS).collect()
         }
 
-    plain = run("t_plain", "ckpt_plain")
-    suppressed = run("t_supp", "ckpt_supp", suppress_stale=True)
-    assert suppressed == plain == oracle_rows(rows)
+    for log_dir, want in ((log, oracle_rows(rows)), (patch_log, patch_want)):
+        name = os.path.basename(log_dir)
+        plain = run(log_dir, f"{name}_plain")
+        suppressed = run(log_dir, f"{name}_supp", suppress_stale=True)
+        assert suppressed == plain == want, log_dir
 
 
 def test_suppressor_forwards_malformed_rows(spark, tmp_path):

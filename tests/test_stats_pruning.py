@@ -18,9 +18,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_mongo_watcher_spark.plans import lake
 from kafka_mongo_watcher_spark.plans.lake import LakeTable, _footer_key_stats
 
-from tests.test_lake_mor import _batch, _row
+from tests.test_lake_mor import _batch, _row, restamp_head
 
 
 def _mk(spark, tmp_path, mode, **kw):
@@ -59,49 +60,43 @@ def test_footer_stats_recorded_per_delta_file(spark, tmp_path):
             ]
 
 
-def test_lookup_prunes_disjoint_range_files(spark, tmp_path):
+def test_lookup_prunes_disjoint_range_files(spark, tmp_path, monkeypatch):
     """3 merges with disjoint repo ranges → a point read scans only the one
     delta file whose bounds cover the key, not the whole chain."""
     t = _mk(spark, tmp_path, "mor")
-    spark.conf.set("kmw.mor.maxDeltasPerBucket", "100")  # keep chains visible
-    try:
-        _merge_range(t, spark, 0, 40, seq=1)
-        _merge_range(t, spark, 40, 80, seq=2)
-        _merge_range(t, spark, 80, 120, seq=3)
-        repo = "repo_0100"  # only in batch 3's range
-        base, deltas = t._lookup_files(repo, "main.py")
-        assert len(base) + len(deltas) == 1
-        assert _total_files(t, repo, "main.py") == 3
-        got = t.lookup(repo, "main.py").collect()
-        assert len(got) == 1 and got[0]["repo"] == repo
-    finally:
-        spark.conf.unset("kmw.mor.maxDeltasPerBucket")
+    monkeypatch.setattr(lake, "MAX_DELTAS_PER_BUCKET", 100)  # keep chains visible
+    _merge_range(t, spark, 0, 40, seq=1)
+    _merge_range(t, spark, 40, 80, seq=2)
+    _merge_range(t, spark, 80, 120, seq=3)
+    repo = "repo_0100"  # only in batch 3's range
+    base, deltas = t._lookup_files(repo, "main.py")
+    assert len(base) + len(deltas) == 1
+    assert _total_files(t, repo, "main.py") == 3
+    got = t.lookup(repo, "main.py").collect()
+    assert len(got) == 1 and got[0]["repo"] == repo
 
 
-def test_pruned_lookup_equals_snapshot_filter_including_tombstones(spark, tmp_path):
+def test_pruned_lookup_equals_snapshot_filter_including_tombstones(spark, tmp_path, monkeypatch):
     """Soundness: for EVERY key ever written (incl. updated and deleted
     ones), the pruned lookup equals the unpruned snapshot filter."""
     t = _mk(spark, tmp_path, "mor")
-    spark.conf.set("kmw.mor.maxDeltasPerBucket", "100")
-    try:
-        _merge_range(t, spark, 0, 30, seq=1)
-        _merge_range(t, spark, 10, 40, seq=2, op="update", content="v2")
-        _merge_range(t, spark, 20, 25, seq=3, op="delete")
-        snap = {
-            (r["repo"], r["path"]): (r["content"], r["commit_seq"])
-            for r in t.snapshot().collect()
-        }
-        for i in range(0, 40):
-            repo = f"repo_{i:04d}"
-            got = t.lookup(repo, "main.py").collect()
-            want = snap.get((repo, "main.py"))
-            if want is None:
-                assert got == [], repo
-            else:
-                assert len(got) == 1, repo
-                assert (got[0]["content"], got[0]["commit_seq"]) == want, repo
-    finally:
-        spark.conf.unset("kmw.mor.maxDeltasPerBucket")
+    monkeypatch.setattr(lake, "MAX_DELTAS_PER_BUCKET", 100)
+    _merge_range(t, spark, 0, 30, seq=1)
+    _merge_range(t, spark, 10, 40, seq=2, op="update", content="v2")
+    _merge_range(t, spark, 20, 25, seq=3, op="delete")
+    snap = {
+        (r["repo"], r["path"]): (r["content"], r["commit_seq"])
+        for r in t.snapshot().collect()
+    }
+    for i in range(0, 40):
+        repo = f"repo_{i:04d}"
+        got = t.lookup(repo, "main.py").collect()
+        want = snap.get((repo, "main.py"))
+        if want is None:
+            assert got == [], repo
+        else:
+            assert len(got) == 1, repo
+            assert (got[0]["content"], got[0]["commit_seq"]) == want, repo
 
 
 def test_compaction_refreshes_stats_and_keeps_pruning(spark, tmp_path):
@@ -130,66 +125,55 @@ def test_recompacted_buckets_record_stats_and_prune(spark, tmp_path):
     assert len(got) == 1 and got[0]["content"] == "v2"
 
 
-def test_stats_survive_sidecar_externalization(spark, tmp_path):
+def test_stats_survive_sidecar_externalization(spark, tmp_path, monkeypatch):
     """Force every manifest entry out to sidecar blobs: pruning still works
     (stats resolve through the same immutable-blob indirection as file
     lists), and the root manifest stays O(buckets)."""
-    spark.conf.set("kmw.manifest.inlineMaxFilesPerBucket", "0")
-    spark.conf.set("kmw.mor.maxDeltasPerBucket", "100")
-    try:
-        t = _mk(spark, tmp_path, "mor")
-        _merge_range(t, spark, 0, 40, seq=1)
-        _merge_range(t, spark, 40, 80, seq=2)
-        assert all(
-            isinstance(e, dict) and set(e) == {"ref", "n"}
-            for e in t.manifest["file_stats"].values()
-        )
-        repo = "repo_0050"
-        base, deltas = t._lookup_files(repo, "main.py")
-        assert len(base) + len(deltas) == 1
-        assert t.lookup(repo, "main.py").count() == 1
-    finally:
-        spark.conf.unset("kmw.manifest.inlineMaxFilesPerBucket")
-        spark.conf.unset("kmw.mor.maxDeltasPerBucket")
+    monkeypatch.setattr(lake, "INLINE_MAX_FILES_PER_BUCKET", 0)
+    monkeypatch.setattr(lake, "MAX_DELTAS_PER_BUCKET", 100)
+    t = _mk(spark, tmp_path, "mor")
+    _merge_range(t, spark, 0, 40, seq=1)
+    _merge_range(t, spark, 40, 80, seq=2)
+    assert all(
+        isinstance(e, dict) and set(e) == {"ref", "n"}
+        for e in t.manifest["file_stats"].values()
+    )
+    repo = "repo_0050"
+    base, deltas = t._lookup_files(repo, "main.py")
+    assert len(base) + len(deltas) == 1
+    assert t.lookup(repo, "main.py").count() == 1
 
 
 def test_missing_stats_degrade_to_scan_not_wrong_answer(spark, tmp_path):
-    """Files without a stats entry (e.g. written with kmw.stats.collect=
-    false, or by an older engine) are always scanned."""
-    spark.conf.set("kmw.stats.collect", "false")
-    try:
-        t = _mk(spark, tmp_path, "mor")
-        _merge_range(t, spark, 0, 40, seq=1)
-        assert t.manifest["file_stats"] == {}
-        repo = "repo_0007"
-        base, deltas = t._lookup_files(repo, "main.py")
-        assert len(base) + len(deltas) == _total_files(t, repo, "main.py")
-        assert t.lookup(repo, "main.py").count() == 1
-    finally:
-        spark.conf.unset("kmw.stats.collect")
+    """Files without a stats entry (written by an older engine) are always
+    scanned."""
+    t = _mk(spark, tmp_path, "mor")
+    _merge_range(t, spark, 0, 40, seq=1)
+    t = restamp_head(spark, t, lambda m: m.update(file_stats={}))
+    assert t.manifest["file_stats"] == {}
+    repo = "repo_0007"
+    base, deltas = t._lookup_files(repo, "main.py")
+    assert len(base) + len(deltas) == _total_files(t, repo, "main.py")
+    assert t.lookup(repo, "main.py").count() == 1
 
 
-def test_expire_snapshots_keeps_referenced_stats_blobs(spark, tmp_path):
-    spark.conf.set("kmw.manifest.inlineMaxFilesPerBucket", "0")
-    spark.conf.set("kmw.mor.maxDeltasPerBucket", "100")
-    try:
-        t = _mk(spark, tmp_path, "mor")
-        _merge_range(t, spark, 0, 40, seq=1)
-        _merge_range(t, spark, 40, 80, seq=2)
-        _merge_range(t, spark, 80, 120, seq=3)
-        t.expire_snapshots(keep_last=1)
-        t = t.refresh()
-        # current version's stats blobs survived; pruning still exact
-        base, deltas = t._lookup_files("repo_0100", "main.py")
-        assert len(base) + len(deltas) == 1
-        assert t.lookup("repo_0100", "main.py").count() == 1
-    finally:
-        spark.conf.unset("kmw.manifest.inlineMaxFilesPerBucket")
-        spark.conf.unset("kmw.mor.maxDeltasPerBucket")
+def test_expire_snapshots_keeps_referenced_stats_blobs(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(lake, "INLINE_MAX_FILES_PER_BUCKET", 0)
+    monkeypatch.setattr(lake, "MAX_DELTAS_PER_BUCKET", 100)
+    t = _mk(spark, tmp_path, "mor")
+    _merge_range(t, spark, 0, 40, seq=1)
+    _merge_range(t, spark, 40, 80, seq=2)
+    _merge_range(t, spark, 80, 120, seq=3)
+    t.expire_snapshots(keep_last=1)
+    t = t.refresh()
+    # current version's stats blobs survived; pruning still exact
+    base, deltas = t._lookup_files("repo_0100", "main.py")
+    assert len(base) + len(deltas) == 1
+    assert t.lookup("repo_0100", "main.py").count() == 1
 
 
 def test_key_sorted_writes_make_multi_file_base_prunable(spark, tmp_path):
-    """Writes are key-sorted within each task (kmw.write.sortByKey default),
+    """Writes are key-sorted within each task,
     so even same-range batches produce files whose bounds a lookup can
     separate after compaction collapses them into sorted base files."""
     t = _mk(spark, tmp_path, "mor")
@@ -274,29 +258,33 @@ def test_bloom_no_false_negative_for_any_present_key(spark, tmp_path):
         assert got[0]["content"] == f"c{(i % 4) + 1}"
 
 
+def _strip_bloom_locators(m):
+    """Slot 5 cleared, as an engine that wrote no Bloom filters left it
+    (slot 6 column stats are orthogonal to blooms and stay)."""
+    for entry in m["file_stats"].values():
+        for s in entry.values():
+            if len(s) > 5:
+                s[5] = None
+
+
 def test_bloom_disabled_at_write_degrades_to_bounds(spark, tmp_path):
-    spark.conf.set("kmw.write.parquetBloom", "false")
-    try:
-        t = _mk(spark, tmp_path, "mor")
-        for b in range(3):
-            _merge_interleaved(t, spark, b, 3, 90, seq=b + 1)
-        key = ("repo_X", "file_00010.py")
-        bkt = str(t.bucket_of(*key))
-        stats = t._stats_of(bkt)
-        for f, s in stats.items():
-            # no bloom locator recorded (slot 5 absent or None; slot 6 may
-            # hold column stats, which are orthogonal to blooms)
-            assert len(s) == 5 or not s[5], f
-        _, deltas = t._lookup_files(*key)
-        bounds_kept = [
-            f
-            for f in t._entry_files("deltas", bkt)
-            if t._file_may_contain(stats.get(f), *key)
-        ]
-        assert deltas == bounds_kept  # bounds-only, no bloom narrowing
-        assert t.lookup(*key).count() == 1
-    finally:
-        spark.conf.unset("kmw.write.parquetBloom")
+    t = _mk(spark, tmp_path, "mor")
+    for b in range(3):
+        _merge_interleaved(t, spark, b, 3, 90, seq=b + 1)
+    t = restamp_head(spark, t, _strip_bloom_locators)
+    key = ("repo_X", "file_00010.py")
+    bkt = str(t.bucket_of(*key))
+    stats = t._stats_of(bkt)
+    for f, s in stats.items():
+        assert len(s) == 5 or not s[5], f  # no bloom locator recorded
+    _, deltas = t._lookup_files(*key)
+    bounds_kept = [
+        f
+        for f in t._entry_files("deltas", bkt)
+        if t._file_may_contain(stats.get(f), *key)
+    ]
+    assert deltas == bounds_kept  # bounds-only, no bloom narrowing
+    assert t.lookup(*key).count() == 1
 
 
 def test_bloom_probe_disabled_at_read(spark, tmp_path):
@@ -311,12 +299,6 @@ def test_bloom_probe_disabled_at_read(spark, tmp_path):
         for f in t._entry_files("deltas", bkt)
         if t._file_may_contain(stats.get(f), *key)
     ]
-    spark.conf.set("kmw.lookup.bloom", "false")
-    try:
-        _, deltas = t._lookup_files(*key)
-        assert deltas == bounds_kept  # probe off -> bounds-only
-    finally:
-        spark.conf.unset("kmw.lookup.bloom")
     _, deltas = t._lookup_files(*key)
     assert len(deltas) <= 2 and set(deltas) <= set(bounds_kept)
 
