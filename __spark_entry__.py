@@ -2678,12 +2678,13 @@ _DRIVER_GATE_CAP = 50
 #: the most recent driver run — forced to the head regardless of their last
 #: verdict. Refresh this set whenever engine code a query exercises changes.
 _CHANGED_THIS_ROUND: frozenset[str] = frozenset({
-    "cdc_stream_changes",  # awaitTermination timeout check (ADVICE r4)
-    "cdc_scan_pruned",     # colstats explicit-None entries (ADVICE r4)
-    "cdc_point_lookup",    # reads the same footer-stats structures
-    "cdc_rollback_state",  # rollback semantics audited this round
-    "media_decode_real",   # progressive JPEG now pixel-decoded (r5)
-    "media_decode_meta",   # shares the decode dispatch
+    "cdc_apply_final_state",  # merge fingerprint route, one writer wave
+    "cdc_patch_apply",        # patch fold fingerprints on the same route
+    "cdc_patch_deferred",     # masked-delta write through the same merge
+    "cdc_suppressed_replay",  # streamed merges on the same route
+    "cdc_schema_evolution",   # evolving batches through the same merge
+    "media_decode_real",      # JPEG fill bytes before markers
+    "media_decode_meta",      # shares the decode dispatch
 })
 
 

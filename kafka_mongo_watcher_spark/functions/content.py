@@ -87,13 +87,32 @@ def _ascii_normalize_expr(col):
     return F.when(s == "", F.lit("")).otherwise(F.concat(s, F.lit("\n")))
 
 
+def is_non_ascii(col):
+    """True for a row holding any non-ASCII character (NULL for NULL):
+    byte length == char length iff every char is 1 UTF-8 byte — two
+    counters instead of a third regex scan per row."""
+    return F.octet_length(col) != F.length(col)
+
+
+def ascii_fingerprint(col):
+    """Column → struct<content, content_sha256>, JVM only (regexp chain +
+    sha2, no Python worker) — valid ONLY when every input row is ASCII,
+    like `_ascii_normalize_expr`. `LakeTable.merge` plans it for a batch
+    whose pre-pass saw no `is_non_ascii` row; anything else uses
+    `normalize_and_fingerprint`."""
+    ascii_norm = _ascii_normalize_expr(col)
+    return F.struct(
+        ascii_norm.alias("content"),
+        F.sha2(ascii_norm, 256).alias("content_sha256"),
+    )
+
+
 def normalize_and_fingerprint(col):
     """Column → struct<content, content_sha256>.
 
-    Hybrid plan: pure-ASCII rows (the overwhelming majority of code/CDC
-    content) are normalized and sha256'd entirely JVM-side (regexp chain +
-    sha2 — NFC is the identity on ASCII); only non-ASCII rows pay the
-    pandas-UDF roundtrip. The UDF's input is NULLED for ASCII rows rather
+    Hybrid plan: pure-ASCII rows are normalized and sha256'd entirely
+    JVM-side (regexp chain + sha2 — NFC is the identity on ASCII); only
+    non-ASCII rows pay the pandas-UDF roundtrip. The UDF's input is NULLED for ASCII rows rather
     than branch-gated, because Spark extracts python UDFs into an
     ArrowEvalPython node that runs over every row regardless of when()
     branches — nulls keep the Arrow transfer near-zero-byte while the
@@ -103,16 +122,7 @@ def normalize_and_fingerprint(col):
     Usage: df.withColumn("_nf", normalize_and_fingerprint(F.col("content_raw")))
              .withColumn("content", F.col("_nf.content")) ...
     """
-    # byte length == char length iff every char is 1 UTF-8 byte, i.e. pure
-    # ASCII — two O(1)/O(n) counters instead of a third regex scan per row
-    is_ascii = F.octet_length(col) == F.length(col)
-    ascii_norm = _ascii_normalize_expr(col)
-    return F.when(
-        is_ascii,
-        F.struct(
-            ascii_norm.alias("content"),
-            F.sha2(ascii_norm, 256).alias("content_sha256"),
-        ),
-    ).otherwise(
-        _normalize_and_fingerprint_udf(F.when(is_ascii, F.lit(None)).otherwise(col))
+    non_ascii = is_non_ascii(col)
+    return F.when(~non_ascii, ascii_fingerprint(col)).otherwise(
+        _normalize_and_fingerprint_udf(F.when(non_ascii, col))
     )

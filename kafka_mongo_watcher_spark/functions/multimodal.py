@@ -783,11 +783,19 @@ class _JpegBitReader:
     def sync_to_marker(self) -> int:
         """Discard pad bits and consume the next marker byte pair."""
         self.acc, self.n = 0, 0
-        while self.p[self.off] != 0xFF or self.p[self.off + 1] == 0x00:
-            self.off += 1
+        self.off = _jpeg_find_marker(self.p, self.off)
         m = self.p[self.off + 1]
         self.off += 2
         return m
+
+
+def _jpeg_find_marker(p: bytes, o: int) -> int:
+    """Offset of the 0xFF whose next byte is the next marker id at or after
+    `o`: skips entropy bytes, stuffed 0xFF00 pairs and any run of 0xFF fill
+    bytes, which T.81 B.1.1.2 allows before every marker."""
+    while o + 1 < len(p) and (p[o] != 0xFF or p[o + 1] in (0x00, 0xFF)):
+        o += 1
+    return o
 
 
 class _JpegMarkerHit(Exception):
@@ -850,7 +858,7 @@ def _decode_jpeg_baseline(p: bytes) -> dict:
         if p[off] != 0xFF:
             raise ValueError("bad jpeg marker stream")
         m = p[off + 1]
-        if m == 0xFF:
+        if m == 0xFF:  # fill byte before a marker
             off += 1
             continue
         if m in (0xD8, 0x01) or 0xD0 <= m <= 0xD7:
@@ -994,10 +1002,7 @@ def _jpeg_prog_scan(
         # the ladder's ValueError, never leak the internal signal
         raise ValueError("truncated progressive jpeg scan") from e
     # skip any pad bits, position at the next marker for the outer walk
-    o = r.off
-    while o + 1 < len(p) and (p[o] != 0xFF or p[o + 1] == 0x00):
-        o += 1
-    return o
+    return _jpeg_find_marker(p, r.off)
 
 
 def _jpeg_prog_scan_body(

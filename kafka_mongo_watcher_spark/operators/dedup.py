@@ -45,7 +45,7 @@ def lww_dedup(df: DataFrame, key_cols=KEY_COLS) -> DataFrame:
 
 
 def key_order_tuples(
-    df: DataFrame, key_cols=KEY_COLS, order_cols=None, extra_cols=()
+    df: DataFrame, key_cols=KEY_COLS, order_cols=None, extra_cols=(), extra_aggs=()
 ) -> DataFrame:
     """Distinct (extra, key, ordering) tuples with physical-copy counts —
     the semijoin's pass 1a as a standalone, reusable aggregation.
@@ -58,15 +58,16 @@ def key_order_tuples(
     with an exact 4-column count_distinct, then the broadcast build's own
     tuple aggregation). `extra_cols` (e.g. partition_id) widen the grouping
     so lineage can re-aggregate per partition; `lww_dedup_semijoin`
-    collapses them back out before picking winners.
+    collapses them back out before picking winners. `extra_aggs` (Column
+    aggregates) ride the same pass without splitting any tuple; the scan
+    reads whatever columns they name.
     """
     order_cols = list(
         order_cols or [c for c in ORDER_COLS if c in df.columns] or ["commit_seq"]
     )
     return (
-        df.select(*extra_cols, *key_cols, *order_cols)
-        .groupBy(*extra_cols, *key_cols, *order_cols)
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+        df.groupBy(*extra_cols, *key_cols, *order_cols)
+        .agg(F.count(F.lit(1)).alias("_cnt"), *extra_aggs)
     )
 
 

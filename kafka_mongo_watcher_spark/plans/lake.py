@@ -62,6 +62,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_mongo_watcher_spark.functions.content import (
+    ascii_fingerprint,
+    is_non_ascii,
+    normalize_and_fingerprint,
+)
 from kafka_mongo_watcher_spark.operators.dedup import (
     key_order_tuples,
     lww_dedup,
@@ -93,7 +98,9 @@ PARQUET_BLOOM_MAX_BYTES = 131072
 SEMIJOIN_MAX_BROADCAST_BYTES = 128 << 20
 #: Winners/events ratio above which semijoin stops paying (see merge()).
 SEMIJOIN_MAX_WINNER_RATIO = 0.3
-#: Batches smaller than this skip the winner-ratio gate.
+#: Batches smaller than this skip the winner-ratio gate and write in one
+#: wave of tasks (`_writer_count`): below it every route is
+#: fixed-cost-dominated.
 RATIO_MIN_EVENTS = 50000
 #: Salts of the two-phase salted dedup route.
 N_SALTS = 16
@@ -319,6 +326,19 @@ def _footer_key_stats(abs_path: str):
         bounds["path"][1],
         md.num_rows,
     ]
+
+
+def _fingerprint_content(df: DataFrame, fingerprint) -> DataFrame:
+    """`envelope.fingerprint_content` through `fingerprint`, the column
+    plan `merge()` chose once from its pre-pass: `ascii_fingerprint` when no
+    delivered `content_raw` is non-ASCII, else `normalize_and_fingerprint`."""
+    nf = fingerprint(F.col("content_raw"))
+    return (
+        df.withColumn("_nf", nf)
+        .withColumn("content", F.col("_nf.content"))
+        .withColumn("content_sha256", F.col("_nf.content_sha256"))
+        .drop("_nf", "content_raw")
+    )
 
 
 class LakeTable:
@@ -1413,22 +1433,31 @@ class LakeTable:
             "parquet.bloom.filter.max.bytes", str(PARQUET_BLOOM_MAX_BYTES)
         )
 
-    def _writer_count(self) -> int:
-        """Write-stage task count: min(n_buckets, max(32, cluster
-        parallelism)) — scales with executors instead of r2's hard 32 cap,
-        while never planning more tasks than buckets (each bucket hashes to
-        exactly one writer)."""
-        ceiling = max(32, self.spark.sparkContext.defaultParallelism)
-        return max(1, min(ceiling, self.n_buckets))
+    def _writer_count(self, one_wave: bool = False) -> int:
+        """Write-stage task count, never more tasks than buckets (each
+        bucket hashes to exactly one writer, so the files written do not
+        depend on this count). `one_wave` (a merge of fewer than
+        RATIO_MIN_EVENTS events) on a local master gives min(n_buckets,
+        slots): a floor of 32 ran a 16-bucket merge as 4 waves of one-file
+        tasks on 4 cores, each wave paying task launch and deserialization.
+        Otherwise min(n_buckets, max(32, defaultParallelism)): big merges
+        and full rewrites keep the count they always had (one wave was not
+        shown to pay there, and 32+ tasks bound each task's sort), and a
+        cluster's defaultParallelism counts only the executor cores
+        registered so far (2 before the first registers)."""
+        sc = self.spark.sparkContext
+        slots = sc.defaultParallelism
+        if not (one_wave and (sc.master == "local" or sc.master.startswith("local["))):
+            slots = max(32, slots)
+        return max(1, min(self.n_buckets, slots))
 
-    def _fold_patches(self, batch: DataFrame) -> DataFrame:
+    def _fold_patches(self, batch: DataFrame, fingerprint) -> DataFrame:
         """Patch-batch prefix of merge: fingerprint (null-gated to rows that
-        write content), fill table columns the batch lacks, then per-column
-        LWW fold WITHIN the batch (operators/patch.py) — one map-side-
-        combinable hash aggregate, no state read. The folded rows carry one
-        `_w_{c}` flag per payload column ("some batch event wrote c")."""
-        from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
-
+        write content; `fingerprint` as in `_fingerprint_content`), fill
+        table columns the batch lacks, then per-column LWW fold WITHIN the
+        batch (operators/patch.py) — one map-side-combinable hash
+        aggregate, no state read. The folded rows carry one `_w_{c}` flag
+        per payload column ("some batch event wrote c")."""
         if "content_raw" in batch.columns:
             # fingerprint BEFORE the fold so the patch columns align with
             # the table's stored (content, content_sha256) — but null-gate
@@ -1442,7 +1471,7 @@ class LakeTable:
             batch = batch.withColumn(
                 "content_raw", F.when(writes_content, F.col("content_raw"))
             )
-            batch = fingerprint_content(batch)
+            batch = _fingerprint_content(batch, fingerprint)
         # table columns the batch doesn't carry still enter the fold (as
         # typed nulls): FULL rows write them null — the union-by-name
         # contract (pre-evolution chunks) — while patch rows leave them
@@ -1519,13 +1548,21 @@ class LakeTable:
         # The batch's own rows choose the partial-update route: `_patch`
         # marks patch rows and widens the tuple grouping (a true duplicate
         # delivery carries the same mask, so no tuple splits), and the
-        # lineage agg below ORs it per partition — no extra job.
+        # lineage agg below ORs it per partition — no extra job. The same
+        # pass ORs `_non_ascii` (an aggregate, so it never splits a tuple):
+        # a batch with no non-ASCII content fingerprints in the JVM alone.
+        # It is the one payload column this scan reads: at 1M events it
+        # costs the pre-pass 5-11 s on every batch, and only an all-ASCII
+        # batch gets that back in the write (ARCHITECTURE.md §3).
         is_patch = patch_row() if "patch_mask" in batch.columns else F.lit(False)
+        has_content = "content_raw" in batch.columns
+        non_ascii = is_non_ascii(F.col("content_raw")) if has_content else F.lit(False)
         tuples = key_order_tuples(
             batch.withColumn("_patch", is_patch),
             KEY_COLS,
             order_cols,
             extra_cols=("partition_id", "_patch"),
+            extra_aggs=(F.max(non_ascii).alias("_non_ascii"),),
         ).persist()
         _dedup_caches.append(tuples)
         off_col = "offset" if "offset" in order_cols else order_cols[-1]
@@ -1542,8 +1579,14 @@ class LakeTable:
                 F.sum(_klen * F.col("_cnt")).alias("key_bytes"),
                 F.max("_cnt").alias("max_cnt"),
                 F.max("_patch").alias("patches"),
+                F.max("_non_ascii").alias("non_ascii"),
             )
             .collect()
+        )
+        fingerprint = (
+            normalize_and_fingerprint
+            if any(r["non_ascii"] for r in lineage_rows)
+            else ascii_fingerprint
         )
         # Partial updates (Mongo updateDescription deltas): fold the batch
         # per column into one PARTIAL row per key and append it as a masked
@@ -1553,7 +1596,7 @@ class LakeTable:
         # skipped. Lineage/tuples still count the RAW deliveries.
         patched = any(r["patches"] for r in lineage_rows)
         if patched:
-            batch = self._fold_patches(batch)
+            batch = self._fold_patches(batch, fingerprint)
         elif "patch_mask" in batch.columns:
             batch = batch.drop("patch_mask")
         n_batch_events = sum(r["events"] for r in lineage_rows)
@@ -1638,9 +1681,7 @@ class LakeTable:
             strategy = "window"
             winners = lww_dedup(batch)
         if "content_raw" in winners.columns and "content_sha256" not in winners.columns:
-            from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
-
-            winners = fingerprint_content(winners)
+            winners = _fingerprint_content(winners, fingerprint)
 
         # -- schema evolution: reconcile batch payload columns vs manifest --
         internal_names = {n for n, _ in INTERNAL_FIELDS} | {"op", "lineage"}
@@ -1749,7 +1790,7 @@ class LakeTable:
         # n_buckets — more writers than buckets is just empty tasks),
         # not a hard 32: r2's fixed cap throttled every merge's write
         # stage to 32 tasks on any larger cluster (VERDICT r2 §wrong 3).
-        n_writers = self._writer_count()
+        n_writers = self._writer_count(one_wave=n_batch_events < RATIO_MIN_EVENTS)
         # Key-sorted delta files: the dynamic-partition write already sorts
         # each task by _bucket; widening that same sort to (_bucket, repo,
         # path) is two extra string comparators — FileFormatWriter sees its
@@ -1846,6 +1887,11 @@ class LakeTable:
             "merged_rows": n_winners,
             "compacted_buckets": len(over),
             "dedup_strategy": strategy,
+            "fingerprint": (
+                ("jvm" if fingerprint is ascii_fingerprint else "udf")
+                if has_content
+                else None
+            ),
             "lineage": lineage,
         }
 

@@ -21,6 +21,13 @@ had these, so the driver bench ran 15x slower than the scaling harness):
   package being importable from a real filesystem path (ADVICE r1: on
   --py-files-only clusters the override must fall back to the stock
   daemon, not kill every Python task).
+- `spark.python.sql.dataFrameDebugging.enabled=false`: PySpark's call-site
+  capture adds Py4J round trips to every DataFrame API call, a large share
+  of a small merge's fixed cost (a warm 300-event merge made ~3,100 round
+  trips with it, ~1,200 without it and without the Python UDF). The
+  trade-off: Spark error messages lose the DataFrame query context (the
+  Python line that built the failing expression); set it back to true via
+  `extra_conf` when debugging.
 """
 
 from __future__ import annotations
@@ -96,6 +103,8 @@ def spark_session(
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
         .config("spark.python.worker.reuse", "true")
+        # no per-call origin capture (see module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if _daemon_preload_available():
         builder = (

@@ -244,6 +244,47 @@ def test_jpeg_progressive_every_truncation_point_degrades_cleanly():
         assert meta["body_mean"] is None, f"fake decode at cut={cut}"
 
 
+def _with_fill_bytes(j: bytes, fill: bytes = b"\xff\xff\xff") -> bytes:
+    """Insert a run of 0xFF fill bytes (T.81 B.1.1.2) before every marker
+    after SOI: restart markers inside entropy data and the segment markers
+    between scans alike. Walks segments by length, so 0xFF bytes inside
+    table bodies are never mistaken for markers."""
+    out, off = bytearray(j[:2]), 2
+    while off < len(j):
+        m = j[off + 1]
+        if m == 0xD9:  # EOI
+            return bytes(out + fill + j[off:])
+        (ln,) = struct.unpack_from(">H", j, off + 2)
+        out += fill + j[off : off + 2 + ln]
+        off += 2 + ln
+        # entropy data runs to the next marker that is not RSTn
+        while m == 0xDA and not (j[off] == 0xFF and j[off + 1] and not 0xD0 <= j[off + 1] <= 0xD7):
+            if j[off] == 0xFF and j[off + 1]:  # RSTn
+                out += fill
+            out.append(j[off])
+            off += 1
+    raise AssertionError("no EOI")
+
+
+@pytest.mark.parametrize("encode", [encode_jpeg, encode_jpeg_progressive])
+def test_jpeg_fill_bytes_before_markers_decode_identically(encode):
+    """Any marker may be preceded by 0xFF fill bytes. With a restart
+    interval the fill also lands between entropy data and RSTn, where the
+    decoder used to read the fill byte as the marker id and drop to the
+    probe."""
+    rgb = _gradient(40, 48)
+    j = encode(rgb, subsample=True, restart_interval=2)
+    _decode_jpeg(j)
+    base = _jpeg_decode_scan.last_pixels.copy()
+    padded = _with_fill_bytes(j)
+    assert padded.count(b"\xff\xff\xff\xd0") >= 1
+    _jpeg_decode_scan.last_pixels = None
+    meta = _decode_jpeg(padded)
+    assert (meta["width"], meta["height"], meta["codec"]) == (48, 40, "jpeg")
+    assert meta["body_mean"] is not None  # full decode, not the probe
+    assert np.array_equal(_jpeg_decode_scan.last_pixels, base)
+
+
 def test_jpeg_arithmetic_degrades_to_sof_probe():
     j = bytearray(encode_jpeg(_gradient(16, 16)))
     i = j.find(b"\xff\xc0")
