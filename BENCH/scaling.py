@@ -305,9 +305,11 @@ def main():
 Per BASELINE.json the authoritative criterion is change-event apply
 throughput scaling efficiency ≥ 0.8 from N to 4N executors. No real
 cluster exists in this sandbox, so per the driver instruction we run the
-**identical replay job** (generate → transform → payload-free semijoin LWW
-dedup → fused fingerprint+bucketed MOR merge write) on the same input at
-two executor counts and report throughput at both.
+**identical replay job** (generate → transform → per-key LWW fold →
+fused fingerprint+bucketed MOR merge write) on the same input at two
+executor counts and report throughput at both. The committed 0.816
+campaign measured the retired semijoin engine (gated broadcast-semijoin
+dedup, since replaced by the one fold route); a re-run measures the fold.
 
 **Cluster emulation** — `local-cluster[1,{C},{EXEC_MEM_MB}]` vs
 `local-cluster[4,{C},{EXEC_MEM_MB}]`: one vs four separate {C}-core
@@ -399,12 +401,13 @@ Method notes:
   (`daemon_preload.py`), so wide pandas-UDF stages don't pay a per-slot
   import stampede — without this, worker init alone cost 346 core-seconds
   per 31-task stage and masked all scaling.
-- Dedup is the gated semijoin strategy (`lww_dedup_semijoin`): only
-  (key, commit_seq, offset) shuffles; the content column never crosses the
-  wire, and the MOR merge fuses dedup filter → fingerprint → bucket
-  shuffle → parquet into ONE payload pass (no persist, no count job).
-  Skewed keys are covered by the salted two-phase path + AQE skew-join
-  (tested equivalent).
+- Dedup is the per-key LWW fold (`operators/patch.py`), the merge's one
+  apply route: a map-side partial aggregate collapses each key (a hot
+  repo included) before the key shuffle, and the MOR merge fuses fold →
+  fingerprint → bucket shuffle → parquet into ONE payload pass (no
+  persist, no count job). AQE skew-join stays on. The 0.816 campaign ran
+  the retired gated semijoin instead, which shuffled only (key,
+  commit_seq, offset) and never moved the content column.
 - Same shuffle-partition count per core (2x), same 16 MiB scan splits
   (one ~15 MB datagen file per task — even waves at both levels), RAM
   -backed local dirs (per-node NVMe stand-in) at both levels.

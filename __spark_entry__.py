@@ -2678,13 +2678,15 @@ _DRIVER_GATE_CAP = 50
 #: the most recent driver run — forced to the head regardless of their last
 #: verdict. Refresh this set whenever engine code a query exercises changes.
 _CHANGED_THIS_ROUND: frozenset[str] = frozenset({
-    "cdc_apply_final_state",  # merge fingerprint route, one writer wave
-    "cdc_patch_apply",        # patch fold fingerprints on the same route
-    "cdc_patch_deferred",     # masked-delta write through the same merge
-    "cdc_suppressed_replay",  # streamed merges on the same route
-    "cdc_schema_evolution",   # evolving batches through the same merge
-    "media_decode_real",      # JPEG fill bytes before markers
-    "media_decode_meta",      # shares the decode dispatch
+    "cdc_apply_final_state",  # plain batches now apply through the fold
+    "cdc_patch_apply",        # fingerprint after the fold
+    "cdc_patch_deferred",     # masked-delta write through the same fold
+    "cdc_suppressed_replay",  # streamed merges on the one route
+    "cdc_schema_evolution",   # evolving batches through the fold
+    "cdc_schema_widening",    # widened columns through the fold
+    "cdc_stream_changes",     # changelog rows of folded commits
+    "cdc_changelog",          # changes() over an empty range: JVM-only frame
+    "cdc_point_lookup",       # fully refuted lookups: JVM-only empty frame
 })
 
 

@@ -37,7 +37,6 @@ def bench_cdc_replay(
     spark,
     n_events: int,
     *,
-    salted: bool,
     n_batches: int = 4,
     probe_lookups: int = 0,
     patch_updates: bool = False,
@@ -79,7 +78,7 @@ def bench_cdc_replay(
                 )
             s = table.merge(
                 transform_events(chunk, fingerprint=False),
-                source_id="bench", batch_id=b, salted=salted,
+                source_id="bench", batch_id=b,
             )
             strategies.append(s.get("dedup_strategy"))
         t_merges = time.time() - t0
@@ -238,8 +237,8 @@ def main() -> None:
     # full-size run vs 38.0 s for the second and 33.7 s for the third,
     # after TWO half-size warmups. Two full-size warmups reach the
     # steady-state asymptote; the third identical run is the timed one.
-    bench_cdc_replay(spark, n_events, salted=False)
-    bench_cdc_replay(spark, n_events, salted=False)
+    bench_cdc_replay(spark, n_events)
+    bench_cdc_replay(spark, n_events)
 
     # MIN of 3 timed trials (same estimator as every other heavy bench
     # below): identical back-to-back replay cycles on this VM vary up to
@@ -252,7 +251,7 @@ def main() -> None:
     trials = []
     runs = []
     for _ in range(3):
-        r = bench_cdc_replay(spark, n_events, salted=False, probe_lookups=21)
+        r = bench_cdc_replay(spark, n_events, probe_lookups=21)
         runs.append(r)
         trials.append(round(r["seconds"], 3))
     t = min(trials)
@@ -279,13 +278,10 @@ def main() -> None:
         queries[name] = min(vals)
         return runs[vals.index(min(vals))]
 
-    r2 = _min_of_2("cdc_replay_salted",
-                   lambda: bench_cdc_replay(spark, n_events, salted=True))
-    strategies["cdc_replay_salted"] = r2["dedup_strategies"]
     # same stream with updates delivered as updateDescription deltas: the
     # per-column fold + masked delta append path (operators/patch.py)
     r4 = _min_of_2("cdc_replay_patch",
-                   lambda: bench_cdc_replay(spark, n_events, salted=False, patch_updates=True))
+                   lambda: bench_cdc_replay(spark, n_events, patch_updates=True))
     strategies["cdc_replay_patch"] = r4["dedup_strategies"]
     patch_stats = r4.get("patch_stats")
 
@@ -391,11 +387,9 @@ def main() -> None:
                                         "identical post-warmup cycles)",
                           "heavy_benches": "min of 2 (first run pays shape warmup)"},
             "n_batches": 4,
-            "n_buckets": {"cdc_replay": 64, "cdc_replay_salted": 64,
-                          "cdc_replay_patch": 64},
-            # ACTUAL per-mode routing reported by merge stats (the auto
-            # policy is winner-ratio-aware since r3; at this batch shape —
-            # ~0.7 winners/event — auto routes to salted)
+            "n_buckets": {"cdc_replay": 64, "cdc_replay_patch": 64},
+            # per-mode route reported by merge stats: "fold" for plain
+            # batches, "patch_append" for batches holding partial updates
             "dedup_strategy": strategies,
             "patch_stats": patch_stats,
             "scd2_stats": scd2_stats,

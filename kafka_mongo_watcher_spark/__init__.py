@@ -8,9 +8,11 @@ source-code repositories:
   modeled as per-partition offsets,
 - vectorized pandas/Arrow UDF per-event transforms (content normalization +
   sha256 fingerprinting),
-- last-writer-wins dedup per (repo, path) via window/row_number (salted
-  two-phase variant for skewed hot repos),
-- key-bucketed copy-on-write MERGE into a manifest-versioned parquet lake
+- last-writer-wins per (repo, path) by one per-key fold (a map-side-
+  combinable aggregate, so a hot repo collapses before the shuffle; it
+  equals window/row_number on full rows and applies partial updates per
+  column),
+- key-bucketed merge-on-read MERGE into a manifest-versioned parquet lake
   table (Iceberg jars are unavailable in this sandbox, so `plans.lake`
   implements the same snapshot/atomic-commit/merge semantics natively),
 - exactly-once via idempotent LWW MERGE + batch-id fencing + checkpointed
@@ -20,7 +22,7 @@ source-code repositories:
 Layout:
     sources/     event-log readers (batch replay, streaming tail, snapshot)
     functions/   vectorized pandas UDFs + expression helpers
-    operators/   LWW dedup, envelope build/transform, filters, keep-last-N
+    operators/   LWW fold and dedup, envelope build/transform, filters, keep-last-N
     plans/       LakeTable: manifests, bucketed MOR merge, fencing, compact
     streaming/   foreachBatch pipeline, checkpoint resume
 """

@@ -26,7 +26,6 @@ def main(argv=None) -> int:
     w.add_argument("--checkpoint", required=True)
     w.add_argument("--source-id", default="watch")
     w.add_argument("--max-files-per-trigger", type=int, default=1)
-    w.add_argument("--salted", action="store_true", help="two-phase salted LWW for skewed batches")
     w.add_argument("--metrics-log", default=None)
     w.add_argument(
         "--tech-addr",
@@ -114,11 +113,14 @@ def main(argv=None) -> int:
             LakeTable.create(spark, a.table)
 
         class _LiveStats(list):
-            # batch-granular counters, incremented as each epoch commits so
-            # a live /metrics scrape sees progress (the produce/ack analog
-            # of client_metric.go:23-47)
+            # batch-granular records, emitted as each epoch commits: a live
+            # /metrics scrape sees progress (the produce/ack analog of
+            # client_metric.go:23-47), and a crash keeps the metrics-log
+            # records of every batch committed before it
             def append(self, s):
                 super().append(s)
+                if mlog:
+                    mlog.emit(s)
                 if recorder is not None and not s.get("skipped"):
                     recorder.inc_produce(a.source_id, s.get("merged_rows", 0))
                     recorder.inc_success(a.source_id, s.get("merged_rows", 0))
@@ -131,7 +133,6 @@ def main(argv=None) -> int:
                 checkpoint_dir=a.checkpoint,
                 source_id=a.source_id,
                 max_files_per_trigger=a.max_files_per_trigger,
-                salted=a.salted,
                 metrics_sink=_LiveStats(),
                 # K5 parity (main.go:41-51): SIGINT/SIGTERM stop the stream
                 # and exit 0 with a resumable checkpoint
@@ -140,9 +141,6 @@ def main(argv=None) -> int:
         finally:
             if tech is not None:
                 tech.close()
-        for s in stats:
-            if mlog:
-                mlog.emit(s)
         print(json.dumps({"mode": "watch", "epochs": len(stats),
                           "committed": len([s for s in stats if not s.get("skipped")])}))
     elif a.mode == "replay":

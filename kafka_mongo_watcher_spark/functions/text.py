@@ -250,10 +250,9 @@ def corpus_mix(
 
     Scale shape: a naive per-group row_number puts each group on ONE
     reducer — with 5 domains over 100 TB that is 5 straggler tasks. Instead
-    the rank runs in two phases, the same trick as `lww_dedup_salted`
-    (operators/dedup.py): phase 1 ranks within (group, salt) — n_salts
-    parallel reducers per group — keeping at most `quota` candidates per
-    salt; phase 2 ranks the ≤ n_salts×quota survivors per group. Output is
+    the rank runs in two phases (salting): phase 1 ranks within (group,
+    salt) — n_salts parallel reducers per group — keeping at most `quota`
+    candidates per salt; phase 2 ranks the ≤ n_salts×quota survivors per group. Output is
     identical to the single global per-group rank (any row in the true
     top-quota is in its salt's top-quota), which is exactly what the
     contract oracle computes with one ROW_NUMBER in DuckDB.

@@ -1,7 +1,4 @@
-from kafka_mongo_watcher_spark.operators.dedup import (  # noqa: F401
-    lww_dedup,
-    lww_dedup_salted,
-)
+from kafka_mongo_watcher_spark.operators.dedup import lww_dedup  # noqa: F401
 from kafka_mongo_watcher_spark.operators.envelope import (  # noqa: F401
     build_insert_envelope,
     debug_payload,

@@ -41,10 +41,10 @@ def build_insert_envelope(
       offset = row_number over that partition ordered by (repo, path) —
       fully DETERMINISTIC (hash- and key-derived, independent of scan layout
       and plan re-evaluation), which the downstream multi-pass merge
-      requires: the semijoin dedup and lineage agg each re-scan the batch
-      plan, and a row whose offset changed between passes would be dropped
-      by the winner semijoin. Costs one n-way hash shuffle + per-partition
-      sort — embarrassingly parallel, no global order. `n_partitions`
+      requires: the lineage pre-pass and the fold each re-scan the batch
+      plan, and the lineage counters must describe the rows the fold
+      applies. Costs one n-way hash shuffle + per-partition sort —
+      embarrassingly parallel, no global order. `n_partitions`
       defaults to the session's defaultParallelism.
     - ordering="arrival": partition_id = spark_partition_id(), offset =
       1 + row index within the physical scan partition (low 33 bits of

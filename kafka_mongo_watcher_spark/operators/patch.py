@@ -6,9 +6,11 @@ document (the reference watcher forwards updateDescription unless
 ``ignoreUpdateDescription`` is set, /root/reference/internal/mongo/event.go).
 A CDC lake engine must APPLY such deltas: the stored row keeps the columns
 the event didn't touch. This module folds a batch of mixed full/patch
-events into one row per key; `LakeTable.merge` appends each folded row as
-a delta whose `_write_mask` names the columns it wrote, and reads resolve
-those deltas per column (`LakeTable._resolve_lww_columns`).
+events into one row per key, and it is `LakeTable.merge`'s only apply
+route: a batch of full rows folds to each key's newest row (the
+`operators.dedup.lww_dedup` result), and a batch holding a patch appends
+each folded row as a delta whose `_write_mask` names the columns it wrote;
+reads resolve those deltas per column (`LakeTable._resolve_lww_columns`).
 
 Batch convention
 ----------------
@@ -26,9 +28,10 @@ WRITES c (by ``(commit_seq, offset)``). Only when NO event in the batch
 writes c does the column inherit from table state — at read or
 compaction time, never at ingest.
 
-Scale shape: the fold is ONE hash aggregate keyed on (repo, path) —
+Scale shape: the fold is ONE aggregate keyed on (repo, path) —
 ``max_by`` with a conditional ordering key per column, map-side
-combinable; no window, no self-join, no state read.
+combinable, so a hot key collapses inside each map task before the
+shuffle; no window, no self-join, no state read.
 
 Ordering contract
 -----------------
@@ -69,11 +72,15 @@ def fold_patch_batch(
     (each from the key's LAST event) + one ``c`` value and one ``_w_c``
     boolean ("some batch event wrote c") per payload column. Keys where any
     ``_w_c`` is false inherit that column from table state (the caller's
-    job — LakeTable stores the flags as the row's write mask). ``mask_aliases`` maps a derived column to the mask name that
-    writes it (e.g. ``content_sha256`` is written whenever the mask says
-    ``content``).
+    job — LakeTable stores the flags as the row's write mask).
+    ``mask_aliases`` maps a derived column to the mask name that writes it
+    (e.g. ``content_sha256`` is written whenever the mask says
+    ``content``). A batch without a ``patch_mask`` column holds no patch
+    row: every row writes every column, and each key keeps its newest row.
     """
     mask_aliases = mask_aliases or {}
+    if "patch_mask" not in batch.columns:
+        batch = batch.withColumn("patch_mask", F.lit(None).cast("array<string>"))
     ordk = F.struct(*[F.col(c) for c in order_cols])
     is_patch = patch_row()
     aggs: list[Column] = []

@@ -67,12 +67,6 @@ from kafka_mongo_watcher_spark.functions.content import (
     is_non_ascii,
     normalize_and_fingerprint,
 )
-from kafka_mongo_watcher_spark.operators.dedup import (
-    key_order_tuples,
-    lww_dedup,
-    lww_dedup_salted,
-    lww_dedup_semijoin,
-)
 from kafka_mongo_watcher_spark.operators.patch import fold_patch_batch, patch_row
 
 
@@ -90,20 +84,9 @@ DRIVER_FOOTER_MAX = 64
 #: 8 KB while covering ~100k-distinct-key row groups at ~1% FPP (bigger row
 #: groups degrade FPP gracefully — pruning weakens, never breaks).
 PARQUET_BLOOM_MAX_BYTES = 131072
-#: Semijoin winner-set broadcast budget. Measured A/B at 4M-event batches
-#: (~79 MB winner broadcast): semijoin beats the window path by ~1.5x end-
-#: to-end (157k vs 103k ev/s at 4x4-core executors) — the payload shuffle
-#: it avoids costs far more than the bigger broadcast. Spark's safe
-#: broadcast envelope at stock executor memory.
-SEMIJOIN_MAX_BROADCAST_BYTES = 128 << 20
-#: Winners/events ratio above which semijoin stops paying (see merge()).
-SEMIJOIN_MAX_WINNER_RATIO = 0.3
-#: Batches smaller than this skip the winner-ratio gate and write in one
-#: wave of tasks (`_writer_count`): below it every route is
-#: fixed-cost-dominated.
-RATIO_MIN_EVENTS = 50000
-#: Salts of the two-phase salted dedup route.
-N_SALTS = 16
+#: Merges of fewer events than this on a local master write in one wave of
+#: tasks (`_writer_count`): below it a merge is fixed-cost-dominated.
+ONE_WAVE_MAX_EVENTS = 50000
 
 
 # Safe type-promotion lattice (Iceberg ALTER COLUMN TYPE rules). A batch
@@ -328,16 +311,20 @@ def _footer_key_stats(abs_path: str):
     ]
 
 
-def _fingerprint_content(df: DataFrame, fingerprint) -> DataFrame:
-    """`envelope.fingerprint_content` through `fingerprint`, the column
-    plan `merge()` chose once from its pre-pass: `ascii_fingerprint` when no
-    delivered `content_raw` is non-ASCII, else `normalize_and_fingerprint`."""
+def _fingerprint_content(folded: DataFrame, fingerprint) -> DataFrame:
+    """`envelope.fingerprint_content` over folded rows, through
+    `fingerprint`, the column plan `merge()` chose once from its pre-pass:
+    `ascii_fingerprint` when no delivered `content_raw` is non-ASCII, else
+    `normalize_and_fingerprint`. Both derived columns take the write flag
+    of the `content_raw` they come from."""
     nf = fingerprint(F.col("content_raw"))
     return (
-        df.withColumn("_nf", nf)
+        folded.withColumn("_nf", nf)
         .withColumn("content", F.col("_nf.content"))
         .withColumn("content_sha256", F.col("_nf.content_sha256"))
-        .drop("_nf", "content_raw")
+        .withColumn("_w_content", F.col("_w_content_raw"))
+        .withColumn("_w_content_sha256", F.col("_w_content_raw"))
+        .drop("_nf", "content_raw", "_w_content_raw")
     )
 
 
@@ -658,13 +645,21 @@ class LakeTable:
     def _bucket_files(self, bucket_ids=None) -> list[str]:
         return self._files_of("buckets", bucket_ids)
 
+    def _empty(self) -> DataFrame:
+        """No rows, in the table schema: a zero-partition JVM plan (an empty
+        range), so acting on it starts no Python worker and no task —
+        `createDataFrame([], schema)` ships through a PythonRDD of
+        defaultParallelism tasks."""
+        return self.spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in self._struct_type().fields]
+        )
+
     def _read_files(self, files: list[str]) -> DataFrame:
-        schema = self._struct_type()
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return self._empty()
         # Explicit schema = union-by-name over evolved files: parquet
         # files written before a column existed yield nulls for it.
-        return self.spark.read.schema(schema).parquet(*files)
+        return self.spark.read.schema(self._struct_type()).parquet(*files)
 
     @staticmethod
     def _resolve_lww(df: DataFrame) -> DataFrame:
@@ -1343,7 +1338,7 @@ class LakeTable:
             out = df if out is None else out.unionByName(df)
         if out is None:
             return (
-                self.spark.createDataFrame([], schema)
+                self._empty()
                 .withColumn("_commit_version", F.lit(0))
                 .withColumn("_change_type", F.lit(""))
             )
@@ -1437,7 +1432,7 @@ class LakeTable:
         """Write-stage task count, never more tasks than buckets (each
         bucket hashes to exactly one writer, so the files written do not
         depend on this count). `one_wave` (a merge of fewer than
-        RATIO_MIN_EVENTS events) on a local master gives min(n_buckets,
+        ONE_WAVE_MAX_EVENTS events) on a local master gives min(n_buckets,
         slots): a floor of 32 ran a 16-bucket merge as 4 waves of one-file
         tasks on 4 cores, each wave paying task launch and deserialization.
         Otherwise min(n_buckets, max(32, defaultParallelism)): big merges
@@ -1451,33 +1446,26 @@ class LakeTable:
             slots = max(32, slots)
         return max(1, min(self.n_buckets, slots))
 
-    def _fold_patches(self, batch: DataFrame, fingerprint) -> DataFrame:
-        """Patch-batch prefix of merge: fingerprint (null-gated to rows that
-        write content; `fingerprint` as in `_fingerprint_content`), fill
-        table columns the batch lacks, then per-column LWW fold WITHIN the
-        batch (operators/patch.py) — one map-side-combinable hash
-        aggregate, no state read. The folded rows carry one `_w_{c}` flag
-        per payload column ("some batch event wrote c")."""
-        if "content_raw" in batch.columns:
-            # fingerprint BEFORE the fold so the patch columns align with
-            # the table's stored (content, content_sha256) — but null-gate
-            # content_raw first: a patch row that doesn't write content has
-            # its content value ignored by the fold anyway, so don't pay
-            # normalization+sha bytes for it (the pandas UDF passes nulls
-            # through for free)
-            writes_content = (~patch_row()) | F.array_contains(
-                F.col("patch_mask"), F.lit("content")
-            )
-            batch = batch.withColumn(
-                "content_raw", F.when(writes_content, F.col("content_raw"))
-            )
-            batch = _fingerprint_content(batch, fingerprint)
+    def _fold(self, batch: DataFrame, patched: bool) -> DataFrame:
+        """The one apply route: per-column LWW fold WITHIN the batch
+        (operators/patch.py), one map-side-combinable aggregate on (repo,
+        path) — a hot key collapses inside each map task before the
+        shuffle — and no state read. Without a partial row (`patched`
+        False) the batch's `patch_mask` is dropped: every row writes every
+        column, so each key keeps its newest row, the `lww_dedup` result.
+        Table columns the batch lacks are null-filled first; `content_raw`
+        folds under the `content` mask name and is fingerprinted after the
+        fold. The folded rows carry one `_w_{c}` flag per payload column
+        ("some batch event wrote c")."""
+        if not patched:
+            batch = batch.drop("patch_mask")
         # table columns the batch doesn't carry still enter the fold (as
         # typed nulls): FULL rows write them null — the union-by-name
         # contract (pre-evolution chunks) — while patch rows leave them
         # unwritten, so they inherit from state instead of nulling out
+        derived = {"content", "content_sha256"} if "content_raw" in batch.columns else set()
         for n, typ in self.manifest["user_schema"]:
-            if n not in KEY_COLS and n not in batch.columns:
+            if n not in KEY_COLS and n not in derived and n not in batch.columns:
                 batch = batch.withColumn(n, F.lit(None).cast(typ))
         internal = {n for n, _ in INTERNAL_FIELDS} | {"op", "lineage", "patch_mask"}
         payload_cols = [
@@ -1486,7 +1474,9 @@ class LakeTable:
             if f.name not in internal and f.name not in KEY_COLS
         ]
         return fold_patch_batch(
-            batch, payload_cols, mask_aliases={"content_sha256": "content"}
+            batch,
+            payload_cols,
+            mask_aliases={"content_raw": "content", "content_sha256": "content"},
         )
 
     def merge(
@@ -1495,19 +1485,17 @@ class LakeTable:
         *,
         source_id: str = "default",
         batch_id: int | None = None,
-        salted: bool = False,
     ) -> dict:
-        """Apply a change batch: LWW dedup → per-bucket delta append →
-        atomic snapshot commit. `batch` columns: repo, path, op, commit_seq,
-        offset, partition_id, plus payload columns (commit, content,
-        content_sha256, lang, ...). An optional `patch_mask` column
-        (array<string>) marks 'update' rows as PARTIAL updates (Mongo
-        updateDescription deltas) writing only the masked columns. A batch
-        holding at least one such row is appended as masked deltas (see
-        `_resolve_lww_columns`); any other batch drops the column (NULL
-        mask = full row) and takes a dedup route. `salted=True` forces the
-        salted dedup route for plain batches. Returns per-merge stats incl.
-        per-partition lineage."""
+        """Apply a change batch: per-key LWW fold → per-bucket delta append
+        → atomic snapshot commit. `batch` columns: repo, path, op,
+        commit_seq, offset, partition_id, plus payload columns (commit,
+        content_raw or content + content_sha256, lang, ...). An optional
+        `patch_mask` column (array<string>) marks 'update' rows as PARTIAL
+        updates (Mongo updateDescription deltas) writing only the masked
+        columns. A batch holding at least one such row is appended as masked
+        deltas (see `_resolve_lww_columns`); any other batch folds to full
+        rows (NULL mask). Returns per-merge stats incl. per-partition
+        lineage."""
         self._assert_writable()
         import time as _time
 
@@ -1524,62 +1512,25 @@ class LakeTable:
             _phases[name] = round(now - _t0, 2)
             _t0 = now
 
-        # -- ONE key-column scan feeds everything pre-payload. The batch's
-        # distinct (partition_id, key, ordering) tuples are materialized
-        # once (persisted; payload-free, ~1 small row per distinct tuple)
-        # and re-aggregated three ways:
-        #   1. per-source-partition lineage counters (reference O2,
-        #      /root/reference/internal/metrics/kafka.go:77-90) + the key
-        #      statistics that size the dedup/broadcast strategies (approx
-        #      distinct keys, total key BYTES — ADVICE r1);
-        #   2. the EXACT duplicate-delivery gate (inside lww_dedup_semijoin,
-        #      from the winners' summed copy counts — tiny job over the
-        #      cached tuples);
-        #   3. the semijoin winner set itself (the broadcast build reads the
-        #      cache instead of re-scanning the batch).
-        # r3 scanned the key columns TWICE per batch — a cube()-expanded
-        # lineage agg with an exact 4-column count_distinct, then the
-        # broadcast build's own scan — the largest fixed per-batch cost in
-        # the scaling diagnosis. Now: one plain distinct-tuple agg with
-        # map-side combine, no Expand, no exact-distinct shuffle.
-        sc.setJobDescription(f"merge[{source_id}/{batch_id}]: tuple+lineage agg")
-        order_cols = [c for c in ("commit_seq", "offset") if c in batch.columns]
-        _dedup_caches: list = []
-        # The batch's own rows choose the partial-update route: `_patch`
-        # marks patch rows and widens the tuple grouping (a true duplicate
-        # delivery carries the same mask, so no tuple splits), and the
-        # lineage agg below ORs it per partition — no extra job. The same
-        # pass ORs `_non_ascii` (an aggregate, so it never splits a tuple):
-        # a batch with no non-ASCII content fingerprints in the JVM alone.
-        # It is the one payload column this scan reads: at 1M events it
-        # costs the pre-pass 5-11 s on every batch, and only an all-ASCII
-        # batch gets that back in the write (ARCHITECTURE.md §3).
+        # -- ONE pre-pass job over the batch: per-source-partition lineage
+        # counters (reference O2, the reference watcher's internal/metrics/
+        # kafka.go:77-90), plus two flags the batch's own rows set — any
+        # partial row (the patch route), and any non-ASCII `content_raw`
+        # (otherwise the fingerprint runs in the JVM alone). `content_raw`
+        # is the one payload column this scan reads: at 1M events it costs
+        # the pre-pass 5-11 s on every batch, and only an all-ASCII batch
+        # gets that back in the write (ARCHITECTURE.md §3).
+        sc.setJobDescription(f"merge[{source_id}/{batch_id}]: lineage")
         is_patch = patch_row() if "patch_mask" in batch.columns else F.lit(False)
         has_content = "content_raw" in batch.columns
         non_ascii = is_non_ascii(F.col("content_raw")) if has_content else F.lit(False)
-        tuples = key_order_tuples(
-            batch.withColumn("_patch", is_patch),
-            KEY_COLS,
-            order_cols,
-            extra_cols=("partition_id", "_patch"),
-            extra_aggs=(F.max(non_ascii).alias("_non_ascii"),),
-        ).persist()
-        _dedup_caches.append(tuples)
-        off_col = "offset" if "offset" in order_cols else order_cols[-1]
-        _klen = (
-            F.length(F.coalesce(F.col(KEY_COLS[0]), F.lit("")))
-            + F.length(F.coalesce(F.col(KEY_COLS[1]), F.lit("")))
-        )
         lineage_rows = (
-            tuples.groupBy("partition_id")
+            batch.groupBy("partition_id")
             .agg(
-                F.sum("_cnt").alias("events"),
-                F.max(off_col).alias("max_offset"),
-                F.approx_count_distinct(F.xxhash64(*KEY_COLS)).alias("keys_est"),
-                F.sum(_klen * F.col("_cnt")).alias("key_bytes"),
-                F.max("_cnt").alias("max_cnt"),
-                F.max("_patch").alias("patches"),
-                F.max("_non_ascii").alias("non_ascii"),
+                F.count(F.lit(1)).alias("events"),
+                F.max("offset").alias("max_offset"),
+                F.max(is_patch).alias("patches"),
+                F.max(non_ascii).alias("non_ascii"),
             )
             .collect()
         )
@@ -1588,99 +1539,18 @@ class LakeTable:
             if any(r["non_ascii"] for r in lineage_rows)
             else ascii_fingerprint
         )
-        # Partial updates (Mongo updateDescription deltas): fold the batch
-        # per column into one PARTIAL row per key and append it as a masked
-        # delta — a blind write, no state read at ingest, no persist, no
-        # bucket-id collect; reads and compaction resolve per column
-        # (_resolve_lww_columns). Dedup below is then a no-op and is
-        # skipped. Lineage/tuples still count the RAW deliveries.
         patched = any(r["patches"] for r in lineage_rows)
-        if patched:
-            batch = self._fold_patches(batch, fingerprint)
-        elif "patch_mask" in batch.columns:
-            batch = batch.drop("patch_mask")
         n_batch_events = sum(r["events"] for r in lineage_rows)
-        # EXACT duplicate-delivery gate, zero extra jobs: a tuple delivered
-        # twice lands in the same source partition (partition_id is key-
-        # derived — envelope hash mode, Kafka keyed produce, Mongo shard
-        # key), so its copies collapse into ONE tuples row with _cnt > 1.
-        has_dups = any((r["max_cnt"] or 0) > 1 for r in lineage_rows)
-        # partition_id is key-derived in the envelope contract, so per-
-        # partition key sets are disjoint and the sum is the global count
-        # (±HLL error); under arrival-ordered envelopes a key can span
-        # partitions and the sum only OVERestimates — conservative for the
-        # broadcast-budget check below.
-        n_keys_ub = sum((r["keys_est"] or 0) for r in lineage_rows)
-        _key_bytes = sum((r["key_bytes"] or 0) for r in lineage_rows)
-        # per-broadcast-row estimate: key bytes + 2 ordering longs + JVM
-        # UnsafeRow/HashedRelation overhead
-        avg_bcast_row = (_key_bytes / max(n_batch_events, 1)) + 64.0
         _mark("lineage")
 
-        # -- intra-batch LWW dedup. Strategy (SURVEY.md §4):
-        #   semijoin — shuffle only (key, ordering); payload never moves; needs
-        #              the winner set to fit a broadcast ⇒ micro-batches.
-        #   window   — row_number over the key window; general fallback.
-        #   salted   — two-phase max_by for skewed keys (explicit salting).
-        # Dedup runs BEFORE the pandas-UDF fingerprint: only winner rows pay
-        # the Python roundtrip (collision factor × less Arrow traffic).
-        # The broadcast winner set is ~1 tuple per distinct key: size it in
-        # BYTES against SEMIJOIN_MAX_BROADCAST_BYTES (ADVICE r1: a snapshot-
-        # load batch must never force an unbounded broadcast).
-        est_winner_bytes = n_keys_ub * avg_bcast_row
-        # Semijoin is only PROFITABLE when dedup actually removes rows: its
-        # win is the loser payload never shuffling, its cost is building +
-        # broadcasting the winner set (driver collect, per-executor fetch,
-        # per-task hash relation — all ~ n_keys, and the MOR write shuffles
-        # the winner payload by bucket anyway). Interleaved A/B on this host
-        # (2M events, 583k keys, 4x8 executors, MOR incl. compaction; r3):
-        #   winners/events 0.29 → semijoin ≈ salted (18.5 vs 17.7 s)
-        #   winners/events 0.47 → salted 30% faster (29.8 vs 20.8 s)
-        #   winners/events 0.70 → salted 37% faster (36.6 vs 23.0 s)
-        #   winners/events 0.90 → salted 2x faster  (72  vs 36  s)
-        # and the r2 A/B at ratio ~0.15 had semijoin 1.5x ahead of window.
-        # Crossover ~0.3; above it the two-phase salted max_by (map-side
-        # combine, no broadcast) wins and keeps winning as batches shrink.
-        # The ratio gate only engages above RATIO_MIN_EVENTS: below it
-        # every strategy is fixed-cost-dominated (ms either way) and
-        # semijoin's single-branch/dup-branch machinery stays the exercised
-        # default.
-        winner_ratio = n_keys_ub / max(n_batch_events, 1)
-        semijoin_profitable = (
-            winner_ratio <= SEMIJOIN_MAX_WINNER_RATIO
-            or n_batch_events < RATIO_MIN_EVENTS
-        )
-        if patched:
-            # the patch fold already produced exactly one row per key
-            strategy = "patch_append"
-            winners = batch
-        elif salted or not semijoin_profitable:
-            strategy = "salted"
-            winners = lww_dedup_salted(batch, n_salts=N_SALTS)
-        elif est_winner_bytes <= SEMIJOIN_MAX_BROADCAST_BYTES:
-            # micro-batch with real duplication: winner tuples comfortably
-            # broadcastable and the saved loser shuffle outweighs the
-            # broadcast. Winner set built FROM the cached tuples: the
-            # broadcast build inside the write job runs one narrow agg over
-            # the cache — no batch re-scan, no separate gate job (has_dups
-            # came free with the lineage agg above). Winners persist only
-            # on the dup branch, where clean/dup split references the plan
-            # twice.
-            strategy = "semijoin"
-            winners = lww_dedup_semijoin(
-                batch,
-                cache_registry=_dedup_caches if has_dups else None,
-                has_dups=has_dups,
-                tuples=tuples,
-                tuples_partition_disjoint=True,
-            )
-        else:
-            # Beyond the byte budget the broadcast (driver collect + per-
-            # executor fetch) anti-scales with cluster size — the shuffling
-            # window path wins.
-            strategy = "window"
-            winners = lww_dedup(batch)
-        if "content_raw" in winners.columns and "content_sha256" not in winners.columns:
+        # -- the one apply route: fold the batch to one row per key. When
+        # the batch holds a partial row, the folded rows are appended as
+        # masked deltas — a blind write, no state read at ingest; reads and
+        # compaction resolve per column (_resolve_lww_columns). The
+        # fingerprint runs after the fold, so only one row per key pays it.
+        winners = self._fold(batch, patched)
+        strategy = "patch_append" if patched else "fold"
+        if "content_raw" in winners.columns:
             winners = _fingerprint_content(winners, fingerprint)
 
         # -- schema evolution: reconcile batch payload columns vs manifest --
@@ -1719,8 +1589,9 @@ class LakeTable:
             # is `_write_mask`, words 1.. form `_write_mask_ext` (stored only
             # by tables that need it). Every payload column went through the
             # fold (manifest columns were null-filled pre-fold, new columns
-            # came FROM the batch), so each has a `_w_{c}` flag — bits are
-            # disjoint, so the sum is the bitwise OR
+            # came FROM the batch, the fingerprint's from `content_raw`), so
+            # each has a `_w_{c}` flag — bits are disjoint, so the sum is
+            # the bitwise OR
             _payload_names = [n for n, _ in user_schema if n not in KEY_COLS]
             _missing_w = [c for c in _payload_names if f"_w_{c}" not in winners.columns]
             if _missing_w:
@@ -1770,8 +1641,9 @@ class LakeTable:
         # across buckets (rewriting touched buckets was the r1
         # scale-killer).
         #
-        # ONE fused payload pass: scan → semijoin dedup filter →
-        # fingerprint → bucket shuffle → parquet. r1 persisted winners
+        # ONE fused payload pass: scan → fold (partial aggregate, key
+        # shuffle, final aggregate) → fingerprint → bucket shuffle →
+        # parquet. r1 persisted winners
         # and ran a separate bucket-count job first — a full extra
         # materialization of the payload (cache build + re-read), the
         # single largest memory-bandwidth term in the r2 scaling
@@ -1782,7 +1654,7 @@ class LakeTable:
         new_version = self.version + 1
         rel_dir = os.path.join("data", f"v{new_version:08d}_{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
-        sc.setJobDescription(f"merge[{source_id}/{batch_id}]: MOR fused dedup+delta write")
+        sc.setJobDescription(f"merge[{source_id}/{batch_id}]: MOR fused fold+delta write")
         obs = Observation()
         # Buckets hashed into writer partitions: every bucket maps to
         # exactly one task ⇒ exactly one delta file per touched bucket
@@ -1790,7 +1662,7 @@ class LakeTable:
         # n_buckets — more writers than buckets is just empty tasks),
         # not a hard 32: r2's fixed cap throttled every merge's write
         # stage to 32 tasks on any larger cluster (VERDICT r2 §wrong 3).
-        n_writers = self._writer_count(one_wave=n_batch_events < RATIO_MIN_EVENTS)
+        n_writers = self._writer_count(one_wave=n_batch_events < ONE_WAVE_MAX_EVENTS)
         # Key-sorted delta files: the dynamic-partition write already sorts
         # each task by _bucket; widening that same sort to (_bucket, repo,
         # path) is two extra string comparators — FileFormatWriter sees its
@@ -1808,8 +1680,6 @@ class LakeTable:
         # feeds an invariant) — anything invariant-grade must come from
         # the committed parquet footers instead (ADVICE r2).
         n_winners = int(obs.get["rows"])
-        for c in _dedup_caches:
-            c.unpersist()
         _mark("dedup_delta_write")
         touched = sorted(
             int(d.split("=", 1)[1])
@@ -2160,6 +2030,11 @@ class LakeTable:
         left for a tombstone to beat (`purge_tombstones=False` keeps them,
         e.g. when a downstream changelog consumer still needs the flags —
         but note `changes()` reads per-commit delta files, not the base).
+        Precondition of the default `purge_tombstones=True`: it is safe only
+        once no older batch can be replayed into the table. A purged
+        tombstone no longer beats an older insert or update of its key, so
+        replaying an older checkpoint after the rewrite resurrects deleted
+        keys; keep the tombstones while such a replay is possible.
         Unlike Iceberg's lazy spec evolution (new spec for new files only,
         readers merge specs), this is an eager rewrite: one heavy commit
         buys back single-spec reads and pruning — the right trade at a few

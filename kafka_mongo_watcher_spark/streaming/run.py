@@ -35,7 +35,6 @@ def run_replay_stream(
     checkpoint_dir: str,
     source_id: str = "watch",
     max_files_per_trigger: int = 1,
-    salted: bool = False,
     stop_after_batches: int | None = None,
     metrics_sink: list | None = None,
     handle_signals: bool = False,
@@ -89,9 +88,7 @@ def run_replay_stream(
             )
             src = valid
         prepared = transform_events(src, fingerprint=False)
-        s = table.merge(
-            prepared, source_id=source_id, batch_id=epoch_id, salted=salted
-        )
+        s = table.merge(prepared, source_id=source_id, batch_id=epoch_id)
         s["epoch"] = epoch_id
         stats.append(s)
 

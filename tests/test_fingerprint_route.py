@@ -54,7 +54,7 @@ def test_plain_batch_fingerprint_route(spark, tmp_path, non_ascii):
         ),
         source_id="s", batch_id=0,
     )
-    assert stats["dedup_strategy"] == "semijoin"
+    assert stats["dedup_strategy"] == "fold"
     assert stats["fingerprint"] == ("udf" if non_ascii else "jvm")
     assert _current(t) == {f"p{i}": _want(raw) for i, raw in enumerate(raws)}
 

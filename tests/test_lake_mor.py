@@ -230,25 +230,47 @@ def test_mor_oracle_parity_on_generated_log(spark, tmp_path):
 
 
 def test_mor_duplicate_delivery_within_batch(spark, tmp_path):
-    """At-least-once redelivery inside ONE batch: the fused lineage+gate agg
-    (cube global row) must detect the exact duplicate and route the semijoin
-    dedup through its dup branch — final state has one row per key."""
+    """At-least-once redelivery inside ONE batch: the fold collapses every
+    exact duplicate to one row per key, while the lineage counters still
+    count each physical delivery."""
     t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8, write_mode="mor")
     rows = [_row("insert", "r", f"p{i}", 1) for i in range(20)]
     dup_batch = _batch(spark, rows + rows[:7])  # 7 exact redeliveries
     stats = t.merge(dup_batch, source_id="s", batch_id=0)
-    assert stats["dedup_strategy"] == "semijoin"
+    assert stats["dedup_strategy"] == "fold"
     assert stats["merged_rows"] == 20
+    assert stats["lineage"] == {"0": {"events": 27, "max_offset": 1}}
     assert len(_state(t)) == 20
-    # and a clean batch still takes the no-dups single-branch path
+    # and a clean batch follows on the same route
     stats2 = t.merge(_batch(spark, [_row("update", "r", "p0", 2)]), source_id="s", batch_id=1)
     assert stats2["merged_rows"] == 1
     assert _state(t)[("r", "p0")][2] == 2
 
 
+def test_empty_reads_run_no_task(spark, tmp_path):
+    """A lookup whose files are all refuted and `changes()` over a range
+    with no merge deltas return a zero-partition JVM frame in the table
+    schema: no task runs and no Python worker starts."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    t.merge(_batch(spark, [_row("insert", "r", "p", 1)]), source_id="s", batch_id=0)
+    t.compact()
+    fields = [(f.name, f.dataType) for f in t._struct_type().fields]
+    assert t._lookup_files("zz", "q") == ([], [])  # bounds refute the base file
+    look = t.lookup("zz", "q")
+    ch = t.changes(t.version - 1, t.version)  # the compaction commit only
+    assert [(f.name, f.dataType) for f in look.schema.fields] == [
+        f for f in fields if f[0] not in ("_write_mask", "_write_mask_ext")
+    ]
+    assert [(f.name, f.dataType) for f in ch.schema.fields][: len(fields)] == fields
+    assert ch.columns[len(fields):] == ["_commit_version", "_change_type"]
+    for df in (look, ch):
+        assert df.rdd.getNumPartitions() == 0
+        assert df.count() == 0
+
+
 def test_writer_count_scales_with_parallelism_and_conf(spark, tmp_path, monkeypatch):
     """Write tasks: min(buckets, max(32, defaultParallelism)), except that
-    a small merge (fewer than RATIO_MIN_EVENTS events) on a local master
+    a small merge (fewer than ONE_WAVE_MAX_EVENTS events) on a local master
     runs one wave, min(buckets, defaultParallelism). Every bucket still
     hashes to exactly one task, so a 16-bucket merge on 4 task slots writes
     exactly one file per touched bucket. A cluster master keeps the floor
@@ -365,37 +387,34 @@ def test_compaction_plan_is_single_shuffle(spark, tmp_path):
     assert _state(t) == before
 
 
-def test_auto_strategy_routes_by_winner_ratio(spark, tmp_path, monkeypatch):
-    """The auto dedup policy is profitability-aware (r3 A/B, lake.py): a
-    large batch whose winner set is most of the batch (dedup removes little
-    → the semijoin broadcast costs more than the loser shuffle it saves)
-    routes to salted; a large batch with heavy per-key duplication stays on
-    semijoin; below the ratioMinEvents floor tiny batches keep the semijoin
-    default regardless of ratio. Results are strategy-independent (the
-    equivalence suite) — this pins only the routing."""
+def test_auto_strategy_routes_by_winner_ratio(spark, tmp_path):
+    """Every plain batch takes the one route whatever its winner ratio —
+    most of the batch (high cardinality), ~1% of it (heavy per-key
+    duplication) or a tiny batch of distinct keys — and after each merge
+    the table equals the sequential oracle over every event so far."""
     from kafka_mongo_watcher_spark.datagen import generate_events
     from kafka_mongo_watcher_spark.operators.envelope import transform_events
+    from kafka_mongo_watcher_spark.oracle import oracle_rows
 
+    cols = ["repo", "path", "commit", "lang", "content_sha256"]
     t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8, write_mode="mor")
-    monkeypatch.setattr(lake, "RATIO_MIN_EVENTS", 1000)
     # ~3.4 events/key in the generator -> ratio ~0.5-0.7 at this size
     high_card = transform_events(generate_events(spark, 4000), fingerprint=False)
-    s1 = t.merge(high_card, source_id="s", batch_id=0)
-    assert s1["dedup_strategy"] == "salted"
     # same events collapsed onto 40 keys -> ratio ~0.01
     heavy_dup = (
         transform_events(generate_events(spark, 4000), fingerprint=False)
         .withColumn("repo", F.concat(F.lit("r"), (F.col("offset") % 5).cast("string")))
         .withColumn("path", F.concat(F.lit("p"), (F.col("offset") % 8).cast("string")))
-        # keep the keyed-delivery contract the ratio estimator documents:
-        # partition follows the (rewritten) key
         .withColumn("partition_id", F.pmod(F.xxhash64("repo", "path"), F.lit(8)).cast("int"))
     )
-    s2 = t.merge(heavy_dup, source_id="s", batch_id=1)
-    assert s2["dedup_strategy"] == "semijoin"
-    # tiny batch below the floor: semijoin even with no duplication
-    s3 = t.merge(
-        _batch(spark, [_row("insert", "r", f"q{i}", 10 + i) for i in range(5)]),
-        source_id="s", batch_id=2,
-    )
-    assert s3["dedup_strategy"] == "semijoin"
+    # a tiny batch of keys no other shape touches
+    tiny = transform_events(
+        generate_events(spark, 40, seed=7, malformed_per_mille=0), fingerprint=False
+    ).withColumn("repo", F.concat(F.lit("tiny-"), F.col("repo")))
+    events: list[dict] = []
+    for i, batch in enumerate((high_card, heavy_dup, tiny)):
+        events += [r.asDict() for r in batch.collect()]
+        s = t.merge(batch, source_id="s", batch_id=i)
+        assert s["dedup_strategy"] == "fold", i
+        assert t.manifest["masked_buckets"] == [], i
+        assert {tuple(r) for r in t.snapshot().select(*cols).collect()} == oracle_rows(events), i

@@ -327,3 +327,33 @@ def test_cli_watch_serves_tech_endpoints_live(spark, tmp_path):
         if p.poll() is None:
             p.kill()
     assert p.returncode == 0, out
+
+
+def test_cli_watch_metrics_log_keeps_committed_batches_on_crash(spark, tmp_path, monkeypatch):
+    """`watch --metrics-log` writes each batch's record as it commits: a
+    watch whose second batch raises inside `merge` still leaves batch 0's
+    record in the log."""
+    from kafka_mongo_watcher_spark import session
+    from kafka_mongo_watcher_spark.__main__ import main
+    from kafka_mongo_watcher_spark.datagen import generate_events, write_event_log
+    from kafka_mongo_watcher_spark.metrics import MetricsLog
+    from kafka_mongo_watcher_spark.plans.lake import LakeTable
+
+    write_event_log(generate_events(spark, 400), str(tmp_path / "log"), n_chunks=2)
+    merge = LakeTable.merge
+
+    def failing_merge(self, batch, **kw):
+        if kw.get("batch_id") == 1:
+            raise RuntimeError("merge failed")
+        return merge(self, batch, **kw)
+
+    monkeypatch.setattr(LakeTable, "merge", failing_merge)
+    monkeypatch.setattr(session, "spark_session", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    mlog = str(tmp_path / "metrics.jsonl")
+    with pytest.raises(Exception):
+        main(["watch", "--log-dir", str(tmp_path / "log"), "--table", str(tmp_path / "t"),
+              "--checkpoint", str(tmp_path / "ckpt"), "--metrics-log", mlog])
+    records = MetricsLog(mlog).read()
+    assert [r["epoch"] for r in records] == [0]
+    assert not records[0]["skipped"] and records[0]["merged_rows"] > 0

@@ -208,7 +208,7 @@ def test_streaming_patch_log_applies_deltas(spark, tmp_path):
         )
         stats, t = _replay(spark, tmp_path, name)
         assert [s["dedup_strategy"] for s in stats if not s.get("skipped")] == [
-            "semijoin", "patch_append"
+            "fold", "patch_append"
         ], name
         got = {r["path"]: (r["lang"], r["content"], r["commit_seq"])
                for r in t.snapshot().collect()}
@@ -227,7 +227,7 @@ def test_streaming_patch_log_applies_deltas(spark, tmp_path):
     ev.repartition(130).write.parquet(str(log))
     assert len([f for f in os.listdir(log) if f.endswith(".parquet")]) == 130
     stats, t = _replay(spark, tmp_path, "wide", max_files_per_trigger=200)
-    assert [s["dedup_strategy"] for s in stats] == ["semijoin"]
+    assert [s["dedup_strategy"] for s in stats] == ["fold"]
     cols = ["repo", "path", "commit", "lang", "content_sha256"]
     assert {tuple(r) for r in t.snapshot().select(*cols).collect()} == oracle_rows(rows)
 

@@ -287,12 +287,12 @@ def test_full_rows_inside_patch_batch_stay_unmasked(spark, tmp_path):
     assert ch["new"] is None
     assert ch["p"] is not None
     # a batch whose patch_mask column is all NULL holds no patch row: it
-    # takes the plain dedup route and the mask never reaches the table
+    # folds to full rows and the mask never reaches the table
     t2 = _mk(spark, tmp_path, "t2")
     s = t2.merge(_b(spark, [
         _full("insert", "a", 1), _full("update", "a", 2), _full("delete", "b", 3),
     ]), source_id="s", batch_id=0)
-    assert s["dedup_strategy"] == "semijoin"
+    assert s["dedup_strategy"] == "fold"
     assert t2.manifest["masked_buckets"] == []
     assert "patch_mask" not in {n for n, _ in t2.manifest["user_schema"]}
     assert {r["path"]: r["_write_mask"] for r in t2.changes(0, 1).collect()} == {

@@ -1,6 +1,7 @@
 """Skew fixture: one hot repo carries ~50% of events (FIXTURES.md §2).
-Salted two-phase LWW + merge must produce results identical to the unsalted
-path and to the oracle (FIXTURES.md §4.7)."""
+The merge must give the oracle's state (FIXTURES.md §4.7), and its fold must
+combine the hot key map-side: a partial aggregate below the key exchange is
+the skew guarantee salting used to give."""
 
 from pyspark.sql import functions as F
 
@@ -18,17 +19,17 @@ def test_skewed_fixture_is_actually_skewed(spark):
     assert 0.4 <= hot / 4000 <= 0.6
 
 
-def test_salted_merge_equals_unsalted_and_oracle(spark, tmp_path):
+def test_skewed_merge_equals_oracle_with_partial_agg_below_exchange(spark, tmp_path):
     ev = generate_events(spark, 4000, skew_pct=50)
     rows = [r.asDict() for r in ev.collect()]
-    want = oracle_rows(rows)
 
-    t_plain = LakeTable.create(spark, str(tmp_path / "plain"), n_buckets=8)
-    t_plain.merge(transform_events(ev), source_id="s", batch_id=0, salted=False)
-    t_salt = LakeTable.create(spark, str(tmp_path / "salt"), n_buckets=8)
-    t_salt.merge(transform_events(ev), source_id="s", batch_id=0, salted=True)
+    t = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8)
+    s = t.merge(transform_events(ev), source_id="s", batch_id=0)
+    assert s["dedup_strategy"] == "fold"
+    got = {tuple(r) for r in t.snapshot().select(*FINAL_COLS).collect()}
+    assert got == oracle_rows(rows)
 
-    got_plain = {tuple(r) for r in t_plain.snapshot().select(*FINAL_COLS).collect()}
-    got_salt = {tuple(r) for r in t_salt.snapshot().select(*FINAL_COLS).collect()}
-    assert got_plain == want
-    assert got_salt == want
+    plan = t._fold(transform_events(ev), patched=False)._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning(repo" in ln)
+    assert any("partial_max_by" in ln for ln in lines[exchange + 1:]), plan
